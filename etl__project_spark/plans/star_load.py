@@ -74,6 +74,28 @@ class ConcurrentWriteError(RuntimeError):
 FACT_COLS = ["datetime_skey", "platform_skey", "site_skey", "title_skey"]
 
 
+def _footer_schema(path: str) -> T.StructType:
+    """The Spark schema stored in the footer of the first data file
+    under ``path`` (Spark writes its schema there as row metadata) —
+    what Spark's own inference reads, without the inference job. Files
+    not written by Spark map through their Arrow schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    for parent, subdirs, files in os.walk(path):
+        subdirs.sort()
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                arrow = pq.read_schema(os.path.join(parent, f))
+                spark_json = (arrow.metadata or {}).get(
+                    b"org.apache.spark.sql.parquet.row.metadata"
+                )
+                if spark_json is None:
+                    return from_arrow_schema(arrow)
+                return T.StructType.fromJson(json.loads(spark_json))
+    raise ValueError(f"{path} holds no parquet file")
+
+
 class ParquetWarehouse:
     """Versioned parquet tables under a root directory.
 
@@ -99,20 +121,28 @@ class ParquetWarehouse:
             return None
 
     def read(
-        self, table: str, schema: T.StructType, version: int | None = None
+        self, table: str, schema: T.StructType | None, version: int | None = None
     ) -> DataFrame:
         """Read the current snapshot, or — time travel — any retained
         older ``version``: snapshots are immutable directories and the
         pointer swap never deletes them, so audits/debugging/reprocessing
         can read the table exactly as of an earlier publish (the same
-        contract Delta/Iceberg expose as VERSION AS OF)."""
+        contract Delta/Iceberg expose as VERSION AS OF).
+
+        ``schema`` is the read contract, for empty and non-empty tables
+        alike — the same evolution contract as :meth:`read_fact`: a
+        column the snapshot lacks null-fills, a column the caller does
+        not name never leaks, and the result has ``schema``'s column
+        order. Handing the reader the schema also skips the footer job
+        Spark would otherwise launch to infer it, once per read.
+        ``schema=None`` (inspection) reads the snapshot's footer schema."""
         v = self._current(table) if version is None else version
         if v is None:
             return empty_frame(self.spark, schema)
         path = os.path.join(self._tdir(table), f"v{v}")
         if version is not None and not os.path.isdir(path):
             raise ValueError(f"{table} has no retained version {version}")
-        return self._strip_layout_cols(self.spark.read.parquet(path))
+        return self._read_paths([path], schema if schema is not None else _footer_schema(path))
 
     @staticmethod
     def _strip_layout_cols(df: DataFrame) -> DataFrame:
@@ -122,6 +152,26 @@ class ParquetWarehouse:
         from etl__project_spark.operators.layout import ZBUCKET_COL
 
         return df.drop(ZBUCKET_COL) if ZBUCKET_COL in df.columns else df
+
+    def _read_paths(self, paths: list[str], schema: T.StructType) -> DataFrame:
+        """Read parquet directories as ``schema`` (no inference job).
+        Directory-partitioned (equal-width Z-order) and flat dirs can
+        coexist: when any dir is partitioned the read goes per-directory
+        and unions — Spark's one-shot multi-path partition discovery
+        would otherwise throw CONFLICTING_DIRECTORY_STRUCTURES (pinned by
+        ``tests/test_layout.py:test_mixed_layout_dirs_stay_readable``)."""
+        if not self._any_partitioned(paths):
+            return self._strip_layout_cols(
+                self.spark.read.schema(schema).parquet(*paths)
+            )
+        frames = [
+            self._strip_layout_cols(self.spark.read.schema(schema).parquet(d))
+            for d in paths
+        ]
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out
 
     def versions(self, table: str) -> list[int]:
         """Retained snapshot versions, oldest first (current = last)."""
@@ -477,29 +527,12 @@ class ParquetWarehouse:
         neither breaks the read nor silently leaks — where first-file
         schema inference DROPPED new columns whenever an old directory
         was listed first (order-dependent data loss on read, caught in
-        round 10; pinned by ``tests/test_star_load.py``).
-
-        Directory-partitioned (equal-width Z-order) and flat batch dirs
-        can coexist in one table: when any live dir is partitioned the
-        read goes per-directory and unions — Spark's one-shot multi-path
-        partition discovery would otherwise throw
-        CONFLICTING_DIRECTORY_STRUCTURES (pinned by
-        ``tests/test_layout.py:test_mixed_layout_dirs_stay_readable``)."""
+        round 10; pinned by ``tests/test_star_load.py``). Partitioned
+        and flat batch dirs can coexist (see :meth:`_read_paths`)."""
         dirs = self._live_dirs(table)
         if not dirs:
             return empty_frame(self.spark, schema)
-        if not self._any_partitioned(dirs):
-            return self._strip_layout_cols(
-                self.spark.read.schema(schema).parquet(*dirs)
-            )
-        frames = [
-            self._strip_layout_cols(self.spark.read.schema(schema).parquet(d))
-            for d in dirs
-        ]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return self._read_paths(dirs, schema)
 
     def compact_fact(
         self, table: str, num_files: int = 1, layout=None
@@ -1182,7 +1215,12 @@ def _bloom_position_cols(key_col: str, n_bits: int = BLOOM_BITS, k: int = BLOOM_
 
 
 def index_fact_batch(
-    wh: ParquetWarehouse, table: str, batch_id: str, key_col: str
+    wh: ParquetWarehouse,
+    table: str,
+    batch_id: str,
+    key_col: str,
+    *,
+    schema: T.StructType | None = None,
 ) -> int:
     """Build the bloom data-skipping index for one landed fact batch:
     the distinct bit positions of every key in the batch (ONE distributed
@@ -1197,12 +1235,16 @@ def index_fact_batch(
     provably lack the key. This is the file-skipping half of what
     Delta/Iceberg keep as column stats + bloom metadata, and the stored
     complement of the query-time runtime filter (`tpch_bloom_prune_join`).
+    Only the key column is read, with a known type: from ``schema``
+    (the table's schema) when given, else from one parquet footer of
+    the batch, read on the driver — never a Spark schema-inference job.
     Returns the number of bits set.
     """
     bdir = wh.fact_batch_dir(table, batch_id)
     if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
         raise ValueError(f"batch {batch_id!r} of {table!r} is not landed")
-    df = wh.spark.read.parquet(bdir)
+    field = (schema if schema is not None else _footer_schema(bdir))[key_col]
+    df = wh.spark.read.schema(T.StructType([field])).parquet(bdir)
     pos = (
         df.select(
             F.explode(F.array(*_bloom_position_cols(key_col))).alias("p")
@@ -1331,8 +1373,10 @@ def read_fact_point(
     scan of those. At 100 TB with daily batches this is the difference
     between scanning every partition for one key and scanning the
     handful whose bloom fires — the same contract as Delta's file-level
-    bloom skipping, kept honest here by the no-false-negative test."""
+    bloom skipping, kept honest here by the no-false-negative test.
+    Rows come back as ``schema`` — the same evolution contract as
+    :meth:`ParquetWarehouse.read_fact`."""
     dirs, _ = prune_dirs_for_key(wh, table, key_col, value)
     if not dirs:
         return empty_frame(wh.spark, schema)
-    return wh.spark.read.parquet(*dirs).filter(F.col(key_col) == F.lit(value))
+    return wh._read_paths(dirs, schema).filter(F.col(key_col) == F.lit(value))

@@ -12,13 +12,29 @@ the same code is correct on a real multi-executor cluster:
 - shuffle.partitions defaults to the local core count; on a cluster AQE
   coalesces from a deliberately high initial number, so this knob is safe to
   raise via SPARK_GRAFT_SHUFFLE_PARTITIONS.
+- ``spark.sql.codegen.cache.maxEntries=2000``: the compiled-class cache
+  must hold a recurring job's whole working set. A steady
+  ``stream_star_load`` micro-batch generates ~90 classes and the same
+  ones come back every batch; behind Spark's default LRU of 100 each
+  batch evicted its own classes and recompiled all of them. Counted with
+  an unbounded cache on 4-core local mode, one process generated 142
+  distinct classes for a 6-batch stream load with one compaction
+  (perfbench ``stream_ingest``) and 512 with the 17 ``bench.py``
+  headline queries at sf0.1 added; 2000 leaves ~4x headroom for the
+  rest of the catalog in a long-lived session.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+# Compiled-class cache size; sized in the module docstring. A static
+# conf, read once at JVM start. A generated class averaged 2.5 KB of
+# bytecode (max 11 KB) in the sizing runs, so a full cache holds ~5 MB.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -77,6 +93,7 @@ def get_spark(
         # TIMESTAMP, not TIMESTAMP_NTZ — NTZ breaks unix_micros/watermarks
         # and, with the session tz pinned UTC, TIMESTAMP is value-identical.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -135,10 +152,15 @@ def stats_barrier(df, eager: bool = True):
     return _strip_leaf_stats(df.localCheckpoint(eager=eager))
 
 
+_STATS_BARRIER_DEGRADED = False
+
+
 def _strip_leaf_stats(c):
     """Rebuild a checkpointed frame as a fresh stats-neutral LogicalRDD
     leaf (see :func:`stats_barrier`). Degrades to the plain checkpoint if
-    the private JVM API moves."""
+    the private JVM API moves, and says so once per process: a silent
+    fallback would bring back the compounding join estimates unnoticed."""
+    global _STATS_BARRIER_DEGRADED
     from pyspark.sql import DataFrame
 
     try:
@@ -148,7 +170,19 @@ def _strip_leaf_stats(c):
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
         return DataFrame(ds, c.sparkSession)
-    except Exception:
+    except Exception as exc:
+        if not _STATS_BARRIER_DEGRADED:
+            _STATS_BARRIER_DEGRADED = True
+            # a Py4JJavaError's str() is the whole JVM stack; its
+            # exception's toString() is the one line that names the error
+            java = getattr(exc, "java_exception", None)
+            reason = java.toString() if java is not None else f"{type(exc).__name__}: {exc}"
+            warnings.warn(
+                "stats barrier degraded to a plain checkpoint (leaf "
+                f"statistics kept): internalCreateDataFrame failed with {reason}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return c
 
 

@@ -91,10 +91,29 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
 # pinned session confs _ensure_session_confs establishes before every
 # read) is the schema forever — exactly the metadata a metastore or
 # table format would hand the planner for free. Keyed on (mtime, size)
-# so a regenerated scratch fixture at the same path re-infers. This
-# caches METADATA only — never rows, never results; every load still
-# scans the parquet.
-_SCHEMA_CACHE: dict[tuple[str, float, int], T.StructType] = {}
+# so a regenerated scratch fixture at the same path re-infers. A
+# directory of part files is keyed on its files' sorted (relative path,
+# mtime, size) list, not on the directory's own stat: overwriting a part
+# file in place leaves the directory's mtime alone. This caches METADATA
+# only — never rows, never results; every load still scans the parquet.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
+def _schema_key(path: str) -> tuple:
+    """Cache key for ``path``'s schema; raises OSError when absent."""
+    import os
+    import stat
+
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (path, st.st_mtime, st.st_size)
+    files = []
+    for parent, _dirs, names in os.walk(path):
+        for n in names:
+            fp = os.path.join(parent, n)
+            fst = os.stat(fp)
+            files.append((os.path.relpath(fp, path), fst.st_mtime, fst.st_size))
+    return (path, tuple(sorted(files)))
 
 
 def load_table(
@@ -106,14 +125,11 @@ def load_table(
     either way and the round-robin shuffle is a pure extra stage before
     the driver collects the side anyway (guide §2.1: remove shuffles
     whose output ordering/partitioning nobody needs)."""
-    import os
-
     _ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = None
     try:
-        st = os.stat(path)
-        key = (path, st.st_mtime, st.st_size)
+        key = _schema_key(path)
     except OSError:
         pass  # directory-less/remote path: fall through to plain inference
     schema = _SCHEMA_CACHE.get(key) if key is not None else None

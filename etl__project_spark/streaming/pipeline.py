@@ -67,7 +67,8 @@ def _maintain_rollup(
     if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
         return
     part = (
-        spark.read.parquet(bdir)
+        spark.read.schema(RAW_SCHEMA)
+        .parquet(bdir)
         .groupBy(F.substring("DateTime", 1, 16).alias("minute"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -102,7 +103,7 @@ def _maintain_hll(wh: ParquetWarehouse, spark: SparkSession, batch_id: str) -> N
     bdir = wh.fact_batch_dir("credit", batch_id)
     if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
         return
-    part = hll_registers(spark.read.parquet(bdir), "VideoTitle")
+    part = hll_registers(spark.read.schema(RAW_SCHEMA).parquet(bdir), "VideoTitle")
     wh.publish_merged(
         "hll_videotitle",
         part,
@@ -178,7 +179,7 @@ def _process_batch(
         # always read; a retried batch re-indexes idempotently.
         from etl__project_spark.plans.star_load import index_fact_batch
 
-        index_fact_batch(wh, "credit", str(batch_id), "VideoTitle")
+        index_fact_batch(wh, "credit", str(batch_id), "VideoTitle", schema=RAW_SCHEMA)
     fresh.unpersist()
     # incremental serving-aggregate maintenance (runs even when fresh is
     # empty: a retried batch whose append landed pre-crash catches up here)
@@ -708,7 +709,9 @@ RC_ROLLUP_SCHEMA = T.StructType(
     [
         T.StructField("g", T.LongType()),
         T.StructField("n", T.LongType()),
-        T.StructField("total", T.DecimalType(18, 2)),
+        # what merge_rollups_signed writes: Σ sign·v over decimal(18,2)
+        # factors is decimal(38,4), and the merge keeps that type
+        T.StructField("total", T.DecimalType(38, 4)),
         T.StructField("vmin", T.DecimalType(18, 2)),
         T.StructField("vmax", T.DecimalType(18, 2)),
     ]

@@ -145,3 +145,27 @@ def test_orc_scan_pushes_filters(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [IsNotNull(k), EqualTo(k,3)]" in plan
+
+
+def test_schema_cache_reinfers_after_part_file_overwritten_in_place(spark, tmp_path):
+    """A directory table's cached schema is keyed on its files, not on
+    the directory's own stat: overwriting a part file in place (which
+    leaves the directory's mtime alone) must re-infer, never serve the
+    stale schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl__project_spark.sources.tables import load_table
+
+    tdir = tmp_path / "t.parquet"
+    tdir.mkdir()
+    part = tdir / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    dir_mtime = os.stat(tdir).st_mtime_ns
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), part)
+    os.utime(tdir, ns=(dir_mtime, dir_mtime))  # only the part file changed
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]

@@ -783,6 +783,69 @@ def test_state_checkpoint_pins_storage_level_and_strips_stats(spark):
     assert any("StorageLevel(disk, 1 replicas)" in s for s in lvls), lvls
 
 
+def test_stats_barrier_fallback_warns_once_naming_the_error(spark, monkeypatch):
+    """The stats barrier's fallback to a plain checkpoint is a degraded
+    path (leaf statistics survive and can compound again), so it says
+    so: one RuntimeWarning per process naming the failure, and the
+    checkpointed frame still comes back with the right rows."""
+    import warnings
+
+    from etl__project_spark import session
+
+    class Unbuildable:
+        def __getattr__(self, name):
+            raise RuntimeError("internalCreateDataFrame moved")
+
+    monkeypatch.setattr(session, "_STATS_BARRIER_DEGRADED", False)
+    df = spark.range(5).localCheckpoint()
+    monkeypatch.setattr(df, "_jdf", Unbuildable())
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert session._strip_leaf_stats(df) is df
+        assert session._strip_leaf_stats(df) is df
+    msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
+    assert len(msgs) == 1, msgs
+    assert "plain checkpoint" in msgs[0]
+    assert "internalCreateDataFrame moved" in msgs[0]
+
+
+def test_warehouse_reads_bind_a_schema():
+    """Every ``spark.read...parquet(`` in the warehouse and streaming
+    modules names its schema: a bare read runs a 1-task footer job to
+    infer a schema the caller already has, once per read, every micro-
+    batch (13 of a steady batch's 47 jobs before they were bound). The
+    deliberate exceptions are pinned by count, so a new bare read gets
+    flagged and triaged here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl__project_spark"
+    read_chain = re.compile(
+        r"\.read((?:\s*\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\("
+    )
+    pinned = {
+        # compact_fact (flat + per-directory form): compaction must union
+        # every source's shape, including columns no reader knows yet
+        ("plans/star_load.py", "mergeSchema"): 2,
+        # _compact_sidecars' re-read of the compacted output: once per
+        # compaction, and only when some source lacks a bloom sidecar
+        ("plans/star_load.py", "bare"): 1,
+    }
+    found: dict[tuple[str, str], int] = {}
+    for rel in ("plans/star_load.py", "streaming/pipeline.py"):
+        for m in read_chain.finditer((pkg / rel).read_text()):
+            chain = m.group(1)
+            if ".schema(" in chain:
+                continue
+            kind = "mergeSchema" if "mergeSchema" in chain else "bare"
+            found[(rel, kind)] = found.get((rel, kind), 0) + 1
+    assert found == pinned, (
+        f"schema-less parquet reads {found} != pinned {pinned}: pass the "
+        "schema the caller holds (spark.read.schema(s).parquet), or, for "
+        "a deliberate inference, update the pin here with a justification"
+    )
+
+
 def test_no_duplicate_top_level_definitions():
     """A same-file redefinition silently shadows the earlier function —
     round 10 found TWO stacked instances: a second read_column_stats in

@@ -708,6 +708,59 @@ def test_fact_schema_evolution_null_fills_and_never_drops(spark, tmp_path):
     assert got2 == got
 
 
+def test_read_fact_point_null_fills_added_column_in_any_listing_order(
+    spark, tmp_path, monkeypatch
+):
+    """A point lookup reads with the caller's schema, like read_fact:
+    on a fact that gained a column mid-stream the new column null-fills
+    for the old batch whichever directory is listed first (first-file
+    inference dropped it or kept it depending on that order), and a
+    reader pinned to the old schema never sees it."""
+    from pyspark.sql import types as T
+
+    from etl__project_spark.plans.star_load import read_fact_point
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "evo_wh"))
+    wh.fact_append("f", spark.createDataFrame([(1, 10)], "a long, b long"), "b0")
+    wh.fact_append(
+        "f", spark.createDataFrame([(1, 20, 99)], "a long, b long, c long"), "b1"
+    )
+    wide = T.StructType([T.StructField(c, T.LongType()) for c in ("a", "b", "c")])
+    narrow = T.StructType([T.StructField(c, T.LongType()) for c in ("a", "b")])
+    dirs = [wh.fact_batch_dir("f", "b0"), wh.fact_batch_dir("f", "b1")]
+    for order in (dirs, dirs[::-1]):
+        monkeypatch.setattr(wh, "_live_dirs", lambda table, order=order: list(order))
+        got = read_fact_point(wh, "f", wide, "a", 1)
+        assert got.columns == ["a", "b", "c"]
+        assert sorted(tuple(r) for r in got.collect()) == [(1, 10, None), (1, 20, 99)]
+        old_reader = read_fact_point(wh, "f", narrow, "a", 1)
+        assert old_reader.columns == ["a", "b"]
+        assert sorted(tuple(r) for r in old_reader.collect()) == [(1, 10), (1, 20)]
+
+
+def test_read_honours_schema_on_non_empty_tables(spark, tmp_path):
+    """``ParquetWarehouse.read`` binds the caller's schema for a
+    non-empty snapshot too: a column the snapshot lacks null-fills, a
+    column the caller does not name never leaks, and the column order
+    is the schema's — the contract empty tables already had."""
+    from pyspark.sql import types as T
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.publish("t", spark.createDataFrame([(1, "x", 7)], "k long, v string, extra long"))
+    schema = T.StructType(
+        [
+            T.StructField("v", T.StringType()),
+            T.StructField("k", T.LongType()),
+            T.StructField("added", T.LongType()),
+        ]
+    )
+    got = wh.read("t", schema)
+    assert got.columns == ["v", "k", "added"]
+    assert [tuple(r) for r in got.collect()] == [("x", 1, None)]
+    # schema=None reads the snapshot as written
+    assert wh.read("t", None).columns == ["k", "v", "extra"]
+
+
 def test_gc_fact_reclaims_crash_garbage_only(spark, tmp_path):
     """gc_fact removes exactly the three dead classes — staging dirs a
     crash orphaned, absorbed batch dirs whose best-effort delete never
