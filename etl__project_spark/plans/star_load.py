@@ -5,28 +5,28 @@ file-backed warehouse.
 The reference moves data S3 → pandas → 5 CSVs → S3 → Redshift COPY →
 staged SQL (lambda_function_s3.py + lambda_function_redishift.py). Here the
 CSV hop disappears (stages chain as one lazy plan) and the warehouse is a
-directory of versioned parquet tables with an atomically-swapped CURRENT
-pointer — the plain-filesystem stand-in for a transactional table format:
+directory of parquet tables, the plain-filesystem stand-in for a
+transactional table format with Delta Lake's log-commit discipline:
 
-- dims: SCD1 upsert → publish a new version → swap pointer (readers never
-  see a half-written table; the reference got this from one Redshift
+- dims: SCD1 upsert → commit a new immutable version through the one
+  commit protocol, ``ParquetWarehouse._commit`` (readers never see a
+  half-written table; the reference got this from one Redshift
   transaction, lambda_function_redishift.py:171-183)
 - fact: append-only, one subdirectory per batch id; a batch directory that
   already exists is skipped → idempotent replay (exactly-once under
   retries, the streaming path's requirement T5)
 
 Scale notes: dim publishes are O(churn), not O(table) — ``publish_delta``
-hardlinks the base snapshot's files into the new version and writes only
-the batch's new keys (the append-only new-key-files move, with the same
-versioned CAS commit). The fact append is a pure write of the new batch —
-no read-modify-write of existing data, so batch cost is O(batch), not
-O(warehouse).
+writes only the batch's new keys and hardlinks the base snapshot's files.
+The fact append is a pure write of the new batch — no read-modify-write of
+existing data, so batch cost is O(batch), not O(warehouse).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -96,13 +96,47 @@ def _footer_schema(path: str) -> T.StructType:
     raise ValueError(f"{path} holds no parquet file")
 
 
-class ParquetWarehouse:
-    """Versioned parquet tables under a root directory.
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path``'s content with one rename, so a reader sees the
+    old file or the new one, never a torn write. The staging file's name
+    starts with a dot, which parquet listings of a data directory skip."""
+    parent, name = os.path.split(path)
+    tmp = os.path.join(parent, f".{name}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
 
-    ``<root>/<table>/v<N>/`` holds a full table snapshot; ``CURRENT`` is a
-    one-line pointer file updated with an atomic rename. K3's CREATE IF NOT
-    EXISTS is implicit (absent table reads as empty), K4's TRUNCATE is a
-    pointer swap to an empty version.
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hardlink, or copy where the filesystem refuses; never overwrite."""
+    try:
+        os.link(src, dst)
+    except FileExistsError:
+        raise
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+class ParquetWarehouse:
+    """Parquet tables under a root directory.
+
+    A versioned table is ``<root>/<table>/v<N>/`` snapshots, each holding
+    every data file of version N, and a ``CURRENT`` file naming the
+    committed one. Every version commits through :meth:`_commit`:
+
+    1. claim ``v<N>.claim`` (N = CURRENT + 1) with O_EXCL — of two
+       writers racing from one base exactly one wins; the other raises
+       ConcurrentWriteError before writing anything;
+    2. write ``v<N>/`` and, for merged folds, ``v<N>.meta``;
+    3. swap ``CURRENT`` by atomic rename — the commit point.
+
+    A write that raises before step 3 removes ``v<N>/`` and ``v<N>.meta``
+    and releases the claim. A writer that dies between steps 1 and 3
+    leaves its claim, and the table's next publish fails loudly until
+    :meth:`force_release`. Committed snapshots are immutable, so retained
+    versions time-travel. K3's CREATE IF NOT EXISTS is implicit (absent
+    table reads as empty), K4's TRUNCATE is a publish of an empty version.
+    Fact tables are batch directories plus a MANIFEST (see below).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -191,20 +225,12 @@ class ParquetWarehouse:
 
     def _claim_version(self, table: str, v: int, base: int | None) -> None:
         """CAS half 1: reserve version ``v`` with an O_EXCL claim file.
-
-        Exactly one of two writers racing from the same base version can
-        create the claim; the loser gets ConcurrentWriteError before it
-        has written anything. Claims are never deleted on success (they
-        are one empty file per retained version), so a writer holding a
-        STALE view of CURRENT also fails — its target version's claim
-        already exists. CAS half 2 (re-read CURRENT after claiming)
-        additionally catches an operator having deleted claim files.
-
-        A writer that crashes between claim and pointer swap leaves its
-        claim behind, blocking the next publish of that table loudly —
-        by design (the snapshot may be half-written); recovery is
-        ``force_release`` after confirming the writer is dead.
-        """
+        Claims are never deleted on success (one empty file per version),
+        so a writer holding a STALE view of CURRENT also fails — its
+        target version's claim already exists. CAS half 2 (re-read
+        CURRENT after claiming) catches an operator having deleted claim
+        files. Only :meth:`_commit` releases a claim, when its write
+        raises."""
         os.makedirs(self._tdir(table), exist_ok=True)
         try:
             fd = os.open(
@@ -268,66 +294,70 @@ class ParquetWarehouse:
             if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", str(dim)):
                 _dir_zone_maps_cached(path, dim)
 
-    def publish(self, table: str, df: DataFrame, layout=None) -> int:
-        """Write a new full snapshot, then atomically swap the pointer.
-        Optimistic CAS via the version claim: concurrent publishes of
-        the same table raise ConcurrentWriteError instead of silently
-        last-writer-wins. ``layout``: optional ZOrderLayout applied to
-        the snapshot files (multi-dimensional data skipping on read)."""
+    def _commit(
+        self, table: str, write, *, inherit: bool = False, merged: set[str] | None = None
+    ) -> int:
+        """Commit version N = CURRENT + 1 of ``table`` (protocol: class
+        docstring) and return N. ``write(path)`` writes the version's own
+        files; ``inherit`` then hardlinks the base snapshot's
+        ``*.parquet`` in under their own names (Spark part names carry a
+        per-job UUID, so they never collide); ``merged``: the batch ids
+        for ``v<N>.meta``. The claim is taken outside the cleanup, so a
+        loser never deletes the winner's files; a dead writer's leftovers
+        (claim force-released) are discarded before writing."""
         base = self._current(table)
+        tdir = self._tdir(table)
+        bdir = os.path.join(tdir, f"v{base}")
+        if inherit and base is not None and self._any_partitioned([bdir]):
+            raise ValueError(
+                f"{table} v{base} is directory-partitioned; a delta publish "
+                "would leave it unreadable — publish the full table instead"
+            )
         v = (base or 0) + 1
         self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        self._layout_write(df, layout, path)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
+        path = os.path.join(tdir, f"v{v}")
+        meta = os.path.join(tdir, f"v{v}.meta")
+        try:
+            self._discard(path, meta)
+            write(path)
+            if inherit and base is not None:
+                for f in os.listdir(bdir):
+                    if f.endswith(".parquet"):
+                        _link_or_copy(os.path.join(bdir, f), os.path.join(path, f))
+            if merged is not None:
+                _atomic_write(meta, json.dumps({"merged": sorted(merged)}))
+            _atomic_write(os.path.join(tdir, "CURRENT"), str(v))
+        except Exception:
+            self._discard(path, meta)
+            self.force_release(table, v)
+            raise
         return v
+
+    @staticmethod
+    def _discard(path: str, meta: str) -> None:
+        shutil.rmtree(path, ignore_errors=True)
+        try:
+            os.remove(meta)
+        except FileNotFoundError:
+            pass
+
+    def publish(self, table: str, df: DataFrame, layout=None) -> int:
+        """Commit ``df`` as the table's new full snapshot. ``layout``:
+        optional ZOrderLayout applied to the snapshot files
+        (multi-dimensional data skipping on read)."""
+        return self._commit(table, lambda path: self._layout_write(df, layout, path))
 
     def publish_delta(self, table: str, delta: DataFrame) -> int:
-        """Publish ``current ∪ delta`` WITHOUT rewriting the current
-        snapshot: the new version directory is the base version's
-        parquet files HARDLINKED in (immutable snapshots make the link
-        safe) plus the delta rows written as new files — an O(churn)
-        publish instead of the O(table) rewrite, which is the
-        manifest-reference move every real table format (Delta/Iceberg)
-        makes on commit, expressed on the plain filesystem. At 100 TB a
-        per-batch dim rewrite is a full-table write per batch; this
-        keeps it proportional to the batch's new keys. Locally it also
-        halves the publish's driver work: the written plan is a
-        filter+project over the already-checkpointed delta, not a
-        scan+union of the whole table (guide §1.2/§5).
-
-        Content-identical to ``publish(current.union(delta))`` — same
-        rows, same schema; the CAS claim protocol, pointer swap, crash
-        behavior (an unswapped version dir is invisible; a dead
-        writer's claim blocks loudly), and read path are unchanged.
-        Falls back to copying when the filesystem refuses hardlinks.
-        """
-        import shutil
-
-        base = self._current(table)
-        v = (base or 0) + 1
-        self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        delta.write.mode("overwrite").parquet(path)
-        if base is not None:
-            bdir = os.path.join(self._tdir(table), f"v{base}")
-            for f in os.listdir(bdir):
-                if not f.endswith(".parquet"):
-                    continue
-                src = os.path.join(bdir, f)
-                dst = os.path.join(path, f"base-{base}-{f}")
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
-        return v
+        """Commit ``current ∪ delta``, content-identical to
+        ``publish(current.union(delta))``, writing only the delta and
+        hardlinking the base snapshot's files: an O(churn) publish, the
+        manifest-reference move Delta/Iceberg make on commit, whose plan
+        is a filter+project over the checkpointed delta instead of a
+        scan+union of the table (guide §1.2/§5). A directory-partitioned
+        base (an equal-width ``ZOrderLayout`` publish) raises ValueError
+        before claiming: flat files beside its partition dirs would be
+        unreadable."""
+        return self._commit(table, delta.write.mode("overwrite").parquet, inherit=True)
 
     def _merged_ids(self, table: str) -> set[str]:
         v = self._current(table)
@@ -349,35 +379,24 @@ class ParquetWarehouse:
     ) -> bool:
         """Exactly-once incremental merge-publish: fold one batch's delta
         into the table via ``merge_fn(existing, delta)`` and publish the
-        result, recording ``batch_id`` in the version's metadata. A
-        replayed batch is a no-op (returns False).
+        result, recording ``batch_id`` in the version's ``.meta``
+        (cumulative merged-id set). A replayed batch is a no-op (returns
+        False). Data and merged set become visible together, so a failure
+        leaves the old state (retry re-merges; the half-written version
+        dir is removed, or, for a dead writer, overwritten once its claim
+        is released) or the new one (retry no-ops).
 
-        Commit protocol: the new version directory and its ``.meta``
-        (cumulative merged-id set) are written first; the atomic CURRENT
-        pointer swap makes data + merged-set visible together, so a crash
-        at any point leaves either the old state (retry re-merges — the
-        half-written version dir is simply overwritten) or the complete
-        new one (retry no-ops). Intended for SMALL aggregated state
-        (rollups): each publish rewrites the table, which is fine when
-        the table is orders of magnitude smaller than the raw history —
-        at real scale, partition the rollup and rewrite only the
-        partitions the delta touches.
+        Intended for SMALL aggregated state (rollups): each publish
+        rewrites the table — at real scale, partition the rollup and
+        rewrite only the partitions the delta touches.
         """
         done = self._merged_ids(table)
         if batch_id in done:
             return False
-        merged = merge_fn(self.read(table, schema), delta)
-        base = self._current(table)
-        v = (base or 0) + 1
-        self._claim_version(table, v, base)
-        path = os.path.join(self._tdir(table), f"v{v}")
-        merged.write.mode("overwrite").parquet(path)
-        with open(os.path.join(self._tdir(table), f"v{v}.meta"), "w") as fh:
-            json.dump({"merged": sorted(done | {batch_id})}, fh)
-        tmp = os.path.join(self._tdir(table), "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(self._tdir(table), "CURRENT"))
+        folded = merge_fn(self.read(table, schema), delta)
+        self._commit(
+            table, folded.write.mode("overwrite").parquet, merged=done | {batch_id}
+        )
         return True
 
     # --- append-only fact -------------------------------------------------
@@ -405,12 +424,6 @@ class ParquetWarehouse:
                 return json.load(fh)
         except FileNotFoundError:
             return None
-
-    def _write_manifest(self, table: str, manifest: dict) -> None:
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self._manifest_path(table))
 
     def _live_batch_dirs(self, table: str) -> list[str]:
         base = self._tdir(table)
@@ -458,13 +471,9 @@ class ParquetWarehouse:
 
     def replace_batch(self, table: str, batch_id: str, df: DataFrame) -> None:
         """Backfill: atomically replace one landed batch's rows — the
-        reprocess-a-bad-day operation. Crash-safe protocol (mirrors
-        compaction): (1) write the replacement to ``rewriting-…`` — a
-        name readers never list; (2) rename it to a manifest-referenced
-        ``rebatch-…`` dir and swap MANIFEST in one atomic step, marking
-        the old batch id absorbed (which excludes its directory from
-        reads even if the delete below never happens); (3) best-effort
-        delete of the old directory. Re-delivery of the ORIGINAL batch
+        reprocess-a-bad-day operation. The replacement commits as a
+        ``rebatch-<n>`` dir with the old batch id absorbed
+        (:meth:`_rewrite_fact`), so re-delivery of the ORIGINAL batch
         after replacement stays a no-op (absorbed ids gate
         ``fact_append``).
 
@@ -483,22 +492,34 @@ class ParquetWarehouse:
             )
         if not os.path.exists(os.path.join(old, "_SUCCESS")):
             raise ValueError(f"batch {batch_id!r} of {table!r} is not landed")
-        n = m["n"] + 1
-        tmp = os.path.join(self._tdir(table), f"rewriting-{n}")
-        final_name = f"rebatch-{n}"
-        df.write.mode("overwrite").parquet(tmp)
-        os.replace(tmp, os.path.join(self._tdir(table), final_name))
-        self._write_manifest(
-            table,
-            {
-                "dirs": sorted(set(m["dirs"]) | {final_name}),
-                "absorbed": sorted(set(m["absorbed"]) | {batch_id}),
-                "n": n,
-            },
+        self._rewrite_fact(
+            table, m, ("rewriting", "rebatch"), df.write.mode("overwrite").parquet,
+            keep=m["dirs"], absorb=[batch_id], drop=[old],
         )
-        import shutil
 
-        shutil.rmtree(old, ignore_errors=True)
+    def _rewrite_fact(
+        self, table: str, m: dict, names: tuple[str, str], write,
+        keep: list[str], absorb: list[str], drop: list[str],
+    ) -> None:
+        """The fact table's one rewrite commit (compaction, batch
+        replacement), crash-safe at every step: ``write`` fills staging
+        dir ``<names[0]>-<n>``, which readers never list; one rename
+        makes it ``<names[1]>-<n>`` and the MANIFEST swap commits it
+        (live dirs := ``keep`` + it, absorbed += ``absorb``); then the
+        ``drop`` dirs, now unreferenced, are deleted best-effort —
+        :func:`gc_fact` reclaims what a crash leaves."""
+        n = m["n"] + 1
+        staging = os.path.join(self._tdir(table), f"{names[0]}-{n}")
+        final = f"{names[1]}-{n}"
+        write(staging)
+        os.replace(staging, os.path.join(self._tdir(table), final))
+        absorbed = sorted(set(m["absorbed"]) | set(absorb))
+        _atomic_write(
+            self._manifest_path(table),
+            json.dumps({"dirs": sorted({*keep, final}), "absorbed": absorbed, "n": n}),
+        )
+        for d in drop:
+            shutil.rmtree(d, ignore_errors=True)
 
     @staticmethod
     def _any_partitioned(dirs: list[str]) -> bool:
@@ -537,16 +558,10 @@ class ParquetWarehouse:
     def compact_fact(
         self, table: str, num_files: int = 1, layout=None
     ) -> int:
-        """Merge all live batch directories into one compacted directory.
-        Returns the number of directories absorbed (0 = nothing to do).
-
-        Commit protocol (crash-safe at every step):
-        1. write the merged data to ``compacting-<n>`` — a name the
-           readers never list, so a crash here leaves harmless garbage;
-        2. rename it to ``compact-<n>`` and swap MANIFEST (the atomic
-           commit: live dirs := [compact-<n>], absorbed += batch ids);
-        3. best-effort delete of the absorbed directories — they are no
-           longer referenced, so a crash mid-delete leaves only garbage.
+        """Merge all live batch directories into one ``compact-<n>``
+        directory, committed by :meth:`_rewrite_fact` with every merged
+        batch id absorbed. Returns the number of directories absorbed
+        (0 = nothing to do).
         """
         batch_dirs = self._live_batch_dirs(table)
         m = self._manifest(table) or {"dirs": [], "absorbed": [], "n": 0}
@@ -554,9 +569,6 @@ class ParquetWarehouse:
         sources = sorted(set(batch_dirs) | set(old_compacts))
         if len(sources) < 2:
             return 0
-        n = m["n"] + 1
-        tmp = os.path.join(self._tdir(table), f"compacting-{n}")
-        final = os.path.join(self._tdir(table), f"compact-{n}")
         # mergeSchema: a compaction over batch dirs written before and
         # after a column was added must union the shapes (null-filling
         # the old rows), not inherit whichever file is listed first —
@@ -578,32 +590,24 @@ class ParquetWarehouse:
             merged = frames[0]
             for f in frames[1:]:
                 merged = merged.unionByName(f, allowMissingColumns=True)
-        if layout is not None:
-            # compaction is where a table gets (re-)clustered: many
-            # append-ordered batch dirs merge into one Z-ordered dir
-            # (Delta OPTIMIZE ZORDER's moment), layout.n_files governs
-            # the output file count instead of coalesce.
-            self._layout_write(merged, layout, tmp)
-        else:
-            merged.coalesce(num_files).write.mode("overwrite").parquet(tmp)
-        self._compact_sidecars(sources, tmp)
-        self._compact_zone_maps(sources, tmp)
-        os.replace(tmp, final)
-        absorbed_ids = [
-            os.path.basename(d).split("=", 1)[1] for d in batch_dirs
-        ]
-        self._write_manifest(
-            table,
-            {
-                "dirs": [f"compact-{n}"],
-                "absorbed": sorted(set(m["absorbed"]) | set(absorbed_ids)),
-                "n": n,
-            },
-        )
-        import shutil
 
-        for d in sources:
-            shutil.rmtree(d, ignore_errors=True)
+        def write(tmp: str) -> None:
+            if layout is not None:
+                # compaction is where a table gets (re-)clustered: many
+                # append-ordered batch dirs merge into one Z-ordered dir
+                # (Delta OPTIMIZE ZORDER's moment), layout.n_files governs
+                # the output file count instead of coalesce.
+                self._layout_write(merged, layout, tmp)
+            else:
+                merged.coalesce(num_files).write.mode("overwrite").parquet(tmp)
+            self._compact_sidecars(sources, tmp)
+            self._compact_zone_maps(sources, tmp)
+
+        self._rewrite_fact(
+            table, m, ("compacting", "compact"), write, keep=[],
+            absorb=[os.path.basename(d).split("=", 1)[1] for d in batch_dirs],
+            drop=sources,
+        )
         return len(sources)
 
     @staticmethod
@@ -674,18 +678,7 @@ class ParquetWarehouse:
                     .distinct()
                     .collect()
                 )
-            tmp_f = os.path.join(tmp, f".BLOOM_{key}.tmp")
-            with open(tmp_f, "w") as fh:
-                json.dump(
-                    {
-                        "key_col": key,
-                        "n_bits": BLOOM_BITS,
-                        "k": BLOOM_K,
-                        "bits": bits,
-                    },
-                    fh,
-                )
-            os.replace(tmp_f, os.path.join(tmp, f"_BLOOM_{key}.json"))
+            _write_bloom(tmp, key, bits)
 
 
 def read_range(
@@ -773,10 +766,12 @@ def load_batch(
     - the fact append is idempotent in PRESENCE — keyed by batch_id,
       committed by ``_SUCCESS``; a partial fact directory (no marker) is
       invisible to readers and simply overwritten on retry;
-    - a writer that died BETWEEN claim and pointer swap leaves its claim
-      behind, and the retry fails LOUDLY (ConcurrentWriteError) rather
-      than racing a possibly-live writer — recovery is ``force_release``
-      once the dead writer is confirmed gone, then re-run.
+    - a dim publish that RAISES leaves nothing behind (its version files
+      are removed and its claim released), so a plain re-run proceeds;
+      a writer that DIED between claim and pointer swap leaves its claim,
+      and the retry fails LOUDLY (ConcurrentWriteError) rather than
+      racing a possibly-live writer — recovery is ``force_release`` once
+      the dead writer is confirmed gone, then re-run.
 
     Readers never see a torn batch: dims are pointer-swapped snapshots,
     and the batch's fact rows appear only at the ``_SUCCESS`` commit.
@@ -864,10 +859,6 @@ def load_batch(
     # executors (FAIR scheduling overlaps their stages).
     def _publish_dim(spec_i: tuple[int, tuple[str, str, str]]) -> tuple[str, DataFrame, str]:
         i, (table, nk, skey) = spec_i
-        # O(churn) publish (guide §1.2): the new version hardlinks the
-        # current snapshot's files and writes ONLY this batch's new keys
-        # — content-identical to publishing current ∪ delta, without
-        # rewriting (or re-planning a scan of) the whole dim per batch.
         wh.publish_delta(
             table,
             numbered.filter(F.col("__dim") == i).select(
@@ -1114,8 +1105,6 @@ def gc_fact(wh: ParquetWarehouse, table: str) -> list[str]:
     or the MANIFEST itself. Returns the directory names removed.
     Idempotent; safe to run on a cadence (the lakehouse VACUUM moment
     for the plain-parquet warehouse)."""
-    import shutil
-
     tdir = wh._tdir(table)
     if not os.path.isdir(tdir):
         return []
@@ -1160,8 +1149,6 @@ def vacuum(wh: ParquetWarehouse, table: str, keep_last: int = 2) -> list[int]:
     concurrent publish can only ADD versions newer than the ones being
     removed — retention never races the write path.
     """
-    import shutil
-
     current = wh._current(table)
     if current is None:
         return []
@@ -1253,14 +1240,17 @@ def index_fact_batch(
         .collect()
     )
     bits = sorted(int(r["p"]) for r in pos)
-    tmp = os.path.join(bdir, f".BLOOM_{key_col}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"key_col": key_col, "n_bits": BLOOM_BITS, "k": BLOOM_K, "bits": bits},
-            fh,
-        )
-    os.replace(tmp, os.path.join(bdir, f"_BLOOM_{key_col}.json"))
+    _write_bloom(bdir, key_col, bits)
     return len(bits)
+
+
+def _write_bloom(bdir: str, key_col: str, bits: list[int]) -> None:
+    _atomic_write(
+        os.path.join(bdir, f"_BLOOM_{key_col}.json"),
+        json.dumps(
+            {"key_col": key_col, "n_bits": BLOOM_BITS, "k": BLOOM_K, "bits": bits}
+        ),
+    )
 
 
 def prune_dirs_for_key(

@@ -846,6 +846,44 @@ def test_warehouse_reads_bind_a_schema():
     )
 
 
+def test_versioned_tables_commit_through_one_protocol():
+    """In the style of the bare-localCheckpoint gate: in
+    ``plans/star_load.py`` only ``ParquetWarehouse._commit`` claims a
+    version or writes ``CURRENT`` (``_current`` only reads it), and
+    ``os.replace`` appears only in ``_atomic_write`` and in the one
+    directory rename of the fact-rewrite helper. Three hand-copied
+    publishes once drifted apart this way: one re-prefixed every
+    inherited file on each version until names overflowed."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl__project_spark"
+    tree = ast.parse((pkg / "plans" / "star_load.py").read_text())
+    sites: dict[str, list[str]] = {"claim": [], "CURRENT": [], "os.replace": []}
+
+    def walk(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                walk(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                callee = ast.unparse(child.func)
+                if callee.endswith("._claim_version"):
+                    sites["claim"].append(func)
+                elif callee == "os.replace":
+                    sites["os.replace"].append(func)
+            elif isinstance(child, ast.Constant) and child.value == "CURRENT":
+                sites["CURRENT"].append(func)
+            walk(child, func)
+
+    walk(tree, "<module>")
+    assert {k: sorted(v) for k, v in sites.items()} == {
+        "claim": ["_commit"],
+        "CURRENT": ["_commit", "_current"],
+        "os.replace": ["_atomic_write", "_rewrite_fact"],
+    }, sites
+
+
 def test_no_duplicate_top_level_definitions():
     """A same-file redefinition silently shadows the earlier function —
     round 10 found TWO stacked instances: a second read_column_stats in

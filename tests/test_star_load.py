@@ -846,12 +846,179 @@ def test_publish_delta_links_base_and_appends_only_churn(spark, tmp_path):
     ) == [(0, "a"), (1, "b")]
     # the v2 directory reuses v1's files by link, not by rewrite
     v2_dir = os.path.join(str(tmp_path / "wh"), "dim", "v2")
-    linked = [f for f in os.listdir(v2_dir) if f.startswith("base-1-")]
-    assert linked, "base snapshot files were not carried into the new version"
-    for f in linked:
-        src = os.path.join(str(tmp_path / "wh"), "dim", "v1", f[len("base-1-"):])
-        assert os.path.samefile(os.path.join(v2_dir, f), src)
+    v1_dir = os.path.join(str(tmp_path / "wh"), "dim", "v1")
+    v1_files = [f for f in os.listdir(v1_dir) if f.endswith(".parquet")]
+    assert v1_files
+    for f in v1_files:
+        assert os.path.samefile(os.path.join(v2_dir, f), os.path.join(v1_dir, f))
     # CAS: a held claim on the next version fails the publish loudly
     wh._claim_version("dim", 3, 2)
     with pytest.raises(ConcurrentWriteError):
         wh.publish_delta("dim", spark.createDataFrame([(3, "d")], schema))
+
+
+# --- the one commit protocol: long horizons and failed commits --------------
+
+
+def test_thirty_delta_publishes_keep_every_row_and_short_names(spark, tmp_path):
+    """The load path publishes every dim on every batch, so one table
+    sees a publish_delta per batch. Over 30 of them every row stays
+    readable, inherited files keep their own names (no name longer than
+    one Spark itself writes), and no claim is left above CURRENT."""
+    import os
+    import re
+
+    from pyspark.sql import types as T
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    schema = T.StructType(
+        [
+            T.StructField("skey", T.LongType(), False),
+            T.StructField("nk", T.StringType(), True),
+        ]
+    )
+    for i in range(30):
+        delta = spark.createDataFrame([(i, f"k{i:02d}")], schema)
+        assert wh.publish_delta("dim", delta) == i + 1
+    got = sorted((r["skey"], r["nk"]) for r in wh.read("dim", schema).collect())
+    assert got == [(i, f"k{i:02d}") for i in range(30)]
+    tdir = tmp_path / "wh" / "dim"
+    spark_name_max = max(len(f) for f in os.listdir(tdir / "v1"))
+    names = [f for _dir, _subdirs, files in os.walk(tdir) for f in files]
+    assert max(map(len, names)) <= spark_name_max
+    claims = [
+        int(m.group(1))
+        for f in os.listdir(tdir)
+        if (m := re.fullmatch(r"v(\d+)\.claim", f))
+    ]
+    assert max(claims) == wh._current("dim") == 30
+
+
+@pytest.mark.parametrize("point", ["write", "swap"])
+@pytest.mark.parametrize("method", ["publish", "publish_delta", "publish_merged"])
+def test_failed_commit_leaves_no_trace_and_next_publish_commits(
+    spark, tmp_path, monkeypatch, method, point
+):
+    """A commit that raises before the CURRENT swap — in the data write,
+    or at the swap itself after data and .meta are on disk — leaves
+    CURRENT unchanged, no v2/, no v2.meta and no held claim, so the next
+    publish commits v2 without a force_release."""
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from etl__project_spark.plans import star_load
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    schema = T.StructType([T.StructField("x", T.LongType())])
+
+    def commit(df, batch_id):
+        if method == "publish_merged":
+            return wh.publish_merged(
+                "t", df, schema, batch_id, lambda old, new: old.unionByName(new)
+            )
+        return getattr(wh, method)("t", df)
+
+    commit(spark.range(2).selectExpr("id AS x"), "b1")
+    good = spark.range(2, 5).selectExpr("id AS x")
+    if point == "write":
+        bad = spark.range(2).select(
+            F.raise_error(F.lit("injected write failure")).cast("long").alias("x")
+        )
+    else:
+        bad = good
+        real_write = star_load._atomic_write
+
+        def failing_swap(path, text):
+            if os.path.basename(path) == "CURRENT":
+                raise OSError("injected swap failure")
+            real_write(path, text)
+
+        monkeypatch.setattr(star_load, "_atomic_write", failing_swap)
+    with pytest.raises(Exception, match="injected"):
+        commit(bad, "b2")
+    monkeypatch.undo()
+
+    tdir = tmp_path / "wh" / "t"
+    assert wh._current("t") == 1
+    assert not (tdir / "v2").exists()
+    assert not (tdir / "v2.meta").exists()
+    assert not (tdir / "v2.claim").exists()
+    assert wh._merged_ids("t") == ({"b1"} if method == "publish_merged" else set())
+
+    commit(good, "b2")
+    assert wh._current("t") == 2
+    want = [2, 3, 4] if method == "publish" else [0, 1, 2, 3, 4]
+    assert sorted(r["x"] for r in wh.read("t", schema).collect()) == want
+
+
+def test_publish_delta_refuses_directory_partitioned_base(spark, tmp_path):
+    """A base published under an equal-width Z-order layout keeps its
+    rows in partition subdirectories; a flat delta beside them would make
+    the version unreadable (and the top-level link loop would drop them).
+    publish_delta raises before claiming: no claim, no version dir."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from etl__project_spark.operators.layout import ZBUCKET_COL, ZOrderLayout
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    schema = T.StructType(
+        [
+            T.StructField("x", T.LongType()),
+            T.StructField("a", T.LongType()),
+            T.StructField("b", T.LongType()),
+        ]
+    )
+    layout = ZOrderLayout(dim_a="a", dim_b="b", bits=3, n_files=4, equal_width=True)
+    base = spark.range(64).selectExpr("id AS x", "id % 8 AS a", "id % 5 AS b")
+    assert wh.publish("t", base, layout=layout) == 1
+    tdir = tmp_path / "wh" / "t"
+    assert any(d.startswith(f"{ZBUCKET_COL}=") for d in os.listdir(tdir / "v1"))
+
+    delta = spark.createDataFrame([(64, 0, 0)], schema)
+    with pytest.raises(ValueError, match="partitioned"):
+        wh.publish_delta("t", delta)
+    assert wh._current("t") == 1
+    assert not (tdir / "v2").exists()
+    assert not (tdir / "v2.claim").exists()
+    assert wh.read("t", schema).count() == 64
+
+
+def _soak_raw(spark, i):
+    """Batch ``i`` of the long-horizon load: a new minute, site and video
+    every batch, a new platform at batches 0, 10 and 20, and a re-sent
+    row of batch i-1. New natural keys always sort after the ones already
+    loaded, so incremental SCD1 numbering equals a one-shot load's."""
+    head = "Android App" if i < 10 else "iPad" if i < 20 else "iPhone App"
+    rows = [
+        (f"2017-01-11T00:{i:02d}:05.000Z", f"site{i:02d}|video {i:03d}", "206"),
+        (f"2017-01-11T00:{i:02d}:35.000Z", f"{head}|clips|video {i:03d}", "206"),
+    ]
+    if i:
+        rows.append(
+            (f"2017-01-11T00:{i - 1:02d}:07.000Z", f"site{i - 1:02d}|video {i - 1:03d}", "206")
+        )
+    return spark.createDataFrame(rows, "DateTime string, VideoTitle string, events string")
+
+
+@pytest.mark.soak
+def test_fifty_load_batches_equal_one_shot_load(spark, tmp_path):
+    """200 dim publishes (4 dims x 50 load_batch calls) through the one
+    commit protocol end with the same dims and fact as one load of all
+    50 batches' rows, every dim at version 50."""
+    from functools import reduce
+
+    from etl__project_spark.plans.star_load import DIM_SPECS
+
+    n = 50
+    raws = [_soak_raw(spark, i) for i in range(n)]
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    for i, raw in enumerate(raws):
+        assert load_batch(raw, wh, f"b{i:02d}", spark)["fact_appended"] == 1
+    assert {wh._current(t) for t, _nk, _skey in DIM_SPECS} == {n}
+    ref = ParquetWarehouse(spark, str(tmp_path / "ref"))
+    load_batch(reduce(lambda a, b: a.unionByName(b), raws), ref, "all", spark)
+    assert _wh_state(spark, wh) == _wh_state(spark, ref)
