@@ -386,6 +386,10 @@ class ParquetWarehouse:
         dir is removed, or, for a dead writer, overwritten once its claim
         is released) or the new one (retry no-ops).
 
+        The folded frame must carry ``schema``'s column types (nullability
+        aside): a drifted type raises ValueError before claiming, instead
+        of being cast silently on every later read.
+
         Intended for SMALL aggregated state (rollups): each publish
         rewrites the table — at real scale, partition the rollup and
         rewrite only the partitions the delta touches.
@@ -394,6 +398,14 @@ class ParquetWarehouse:
         if batch_id in done:
             return False
         folded = merge_fn(self.read(table, schema), delta)
+        got, want = (
+            {f.name: f.dataType.simpleString() for f in s.fields}
+            for s in (folded.schema, schema)
+        )
+        if got != want:
+            raise ValueError(
+                f"{table}: merged frame {got} does not match declared schema {want}"
+            )
         self._commit(
             table, folded.write.mode("overwrite").parquet, merged=done | {batch_id}
         )

@@ -1,6 +1,6 @@
-"""Structured-Streaming star load — the Snowpipe → CDC stream → task-DAG
+"""Structured-Streaming folds — the Snowpipe → CDC stream → task-DAG
 path (SURVEY.md §2.8 T1-T5, §3 entry point 3) collapsed into one
-idiomatic ``readStream → foreachBatch`` pipeline.
+idiomatic ``readStream → foreachBatch`` pipeline per maintained table.
 
 Reference mapping:
 
@@ -13,6 +13,25 @@ Reference mapping:
   append chained as plain function calls inside the batch fn
 - T5 MERGE dedup           → within-batch dropDuplicates + left-anti vs
   already-landed raw rows, then idempotent batch-id fact append
+
+Fold contract (every ``stream_*`` below):
+
+- ``_fold_stream`` is the one place a stream starts: file source,
+  ``foreachBatch``, checkpoint and trigger. Each ``stream_*`` supplies
+  only its source schema and its per-batch ``apply``.
+- Exactly-once comes from the ``publish_merged`` batch-id ledger: each
+  table records the batch ids merged into it, in the same commit as the
+  data, so a replayed batch no-ops on every table it already reached.
+  A single-table fold declares its table, delta and merge through
+  ``_fold_into``.
+- In a multi-table fold every delta is a function of the PRE-batch
+  state, so derived tables publish before the state they derive from: a
+  crash between two publishes replays to identical deltas, the done
+  merges no-op on their batch id, and the state catches up last.
+  Publishing the state first would poison the replayed deltas.
+- Ordered-transport folds (cursors, CDC compaction, postings) assume
+  per-key order ACROSS batches, the file-source / Kafka-partition norm;
+  within a batch any order is fine.
 
 At scale: foreachBatch writes are the only state mutation; the raw
 'CREDIT' table (landed rows) enables cross-batch dedup exactly like the
@@ -32,25 +51,139 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl__project_spark.operators.ivm import consolidate
+from etl__project_spark.operators.merge import cdc_apply
 from etl__project_spark.operators.rollup import merge_rollups
 from etl__project_spark.session import empty_frame, state_checkpoint
 from etl__project_spark.plans.star_load import (
     ConcurrentWriteError,
     ParquetWarehouse,
+    gc_fact,
+    index_fact_batch,
+    join_stats_from_warehouse,
     load_batch,
+    should_recluster,
 )
 from etl__project_spark.sources.readers import RAW_SCHEMA
+
+
+def _fold_stream(
+    spark: SparkSession,
+    schema: T.StructType,
+    landing_dir: str,
+    checkpoint_dir: str,
+    apply,
+    available_now: bool,
+    *,
+    max_files_per_trigger: int | None = None,
+    processing_time: str | None = None,
+    csv: bool = False,
+):
+    """Start ``apply(batch, batch_id)`` over the files landing in
+    ``landing_dir`` (JSON lines, or headed CSV with ``csv``) and return
+    the StreamingQuery. ``max_files_per_trigger`` is the file source's
+    backpressure knob: ``availableNow`` honors it, so a backlog drains
+    as several bounded micro-batches instead of one giant one."""
+    reader = spark.readStream.schema(schema)
+    if csv:
+        reader = (
+            reader.option("header", True)
+            .option("quote", '"')
+            .option("escape", "\\")
+        )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    source = reader.csv(landing_dir) if csv else reader.json(landing_dir)
+    writer = source.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def _fold_into(
+    wh: ParquetWarehouse, table: str, schema: T.StructType, delta_fn, merge_fn
+):
+    """The ``apply`` of a single-table fold: merge ``delta_fn(batch)``
+    into ``table`` via ``merge_fn(existing, delta)``, once per batch id."""
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        wh.publish_merged(table, delta_fn(batch), schema, str(batch_id), merge_fn)
+
+    return apply
+
+
+def _sum(c: str) -> Column:
+    return F.sum(c).alias(c)
+
+
+def _min(c: str) -> Column:
+    return F.min(c).alias(c)
+
+
+def _max(c: str) -> Column:
+    return F.max(c).alias(c)
+
+
+def _agg_merge(keys: list[str], **merges):
+    """Per-key merge of mergeable partial state, e.g.
+    ``_agg_merge(["day"], x=_sum)``; every non-key column needs a rule."""
+    return lambda existing, delta: merge_rollups(existing, delta, keys, merges)
+
+
+def _consolidate_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
+    """Merge of signed state: net multiplicity per row, zeros dropped."""
+    return consolidate(existing.unionByName(delta))
+
+
+def _latest_per_key(
+    batch: DataFrame, key: str, seq_cols: tuple[str, ...] = ("seq",)
+) -> DataFrame:
+    """Each key's highest-``seq_cols`` row, tombstones KEPT (a stored
+    tombstone must outlive its key so a late lower-seq update cannot
+    resurrect it)."""
+    return cdc_apply(
+        batch, key_cols=[key], seq_cols=list(seq_cols), drop_deletes=False
+    )
+
+
+def _latest_wins_merge(key: str, seq_cols: tuple[str, ...] = ("seq",)):
+    """Merge that keeps each key's latest row across state and delta —
+    associative, so the two-level (batch, then state) plan is exact."""
+    return lambda existing, delta: _latest_per_key(
+        existing.unionByName(delta), key, seq_cols
+    )
+
+
+def _signed_images(
+    batch: DataFrame, cols: list[str], before: dict[str, str]
+) -> DataFrame:
+    """A Debezium-shaped changelog as signed rows over ``cols``: U/D
+    rows retract their before-image (``before`` maps a column to its
+    before-image column) at −1, non-D rows assert their after-image at
+    +1."""
+    retract = batch.filter(F.col("op").isin("U", "D")).select(
+        *[F.col(before.get(c, c)).alias(c) for c in cols],
+        F.lit(-1).cast("long").alias("sign"),
+    )
+    assert_ = batch.filter(F.col("op") != "D").select(
+        *cols, F.lit(1).cast("long").alias("sign")
+    )
+    return retract.unionByName(assert_)
+
 
 # streaming-maintained serving aggregate: VideoStart rows per minute.
 # Partial state is just (minute, n) — counts merge by sum.
 ROLLUP_SCHEMA = T.StructType(
     [T.StructField("minute", T.StringType()), T.StructField("n", T.LongType())]
 )
-_ROLLUP_MERGES = {"n": lambda c: F.sum(c).alias(c)}
 
 
 def _maintain_rollup(
@@ -61,8 +194,7 @@ def _maintain_rollup(
     micro-batch, never a recompute over raw history. Reads the batch's
     OWN credit directory (not the in-memory frame), so a foreachBatch
     retry that crashed between the raw append and this merge still
-    catches up; ``publish_merged`` makes the merge itself exactly-once
-    per batch id."""
+    catches up."""
     bdir = wh.fact_batch_dir("credit", batch_id)
     if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
         return
@@ -77,9 +209,7 @@ def _maintain_rollup(
         part,
         ROLLUP_SCHEMA,
         batch_id,
-        lambda existing, delta: merge_rollups(
-            existing, delta, ["minute"], _ROLLUP_MERGES
-        ),
+        _agg_merge(["minute"], n=_sum),
     )
 
 
@@ -89,8 +219,7 @@ def _maintain_hll(wh: ParquetWarehouse, spark: SparkSession, batch_id: str) -> N
     per-batch state is <= 64 (reg, rho) longs and the combine is a
     register-wise max, so replays/out-of-order merges are harmless by
     algebra (``datapipe/sketches.py``). Same retry-catchup read-from-
-    batch-dir discipline as ``_maintain_rollup``; ``publish_merged``
-    makes the fold exactly-once per batch id. The maintained sketch
+    batch-dir discipline as ``_maintain_rollup``. The maintained sketch
     hash-equals a one-shot sketch of all landed rows (mergeability —
     pinned by test), so downstream reads one tiny table instead of
     re-scanning raw history for a COUNT(DISTINCT)."""
@@ -109,7 +238,7 @@ def _maintain_hll(wh: ParquetWarehouse, spark: SparkSession, batch_id: str) -> N
         part,
         HLL_SCHEMA,
         batch_id,
-        lambda existing, delta: hll_merge(existing, delta),
+        hll_merge,
     )
 
 
@@ -156,10 +285,6 @@ def _process_batch(
         # one 1-row aggregate per tracked dim over KB-to-MB stats state.
         join_stats = None
         if join_stats_sources is not None:
-            from etl__project_spark.plans.star_load import (
-                join_stats_from_warehouse,
-            )
-
             cms_grids, analyze_ndv = join_stats_sources
             join_stats = join_stats_from_warehouse(
                 wh, cms_grids=cms_grids, analyze_ndv=analyze_ndv
@@ -177,8 +302,6 @@ def _process_batch(
         # them). Advisory by design — if the process dies between the
         # append above and this index write, the unindexed dir is simply
         # always read; a retried batch re-indexes idempotently.
-        from etl__project_spark.plans.star_load import index_fact_batch
-
         index_fact_batch(wh, "credit", str(batch_id), "VideoTitle", schema=RAW_SCHEMA)
     fresh.unpersist()
     # incremental serving-aggregate maintenance (runs even when fresh is
@@ -191,8 +314,6 @@ def _process_batch(
     # deletes left behind (gc_fact — safe here precisely because
     # foreachBatch serializes micro-batches: no concurrent writer).
     if compact_every and (batch_id + 1) % compact_every == 0:
-        from etl__project_spark.plans.star_load import gc_fact
-
         wh.compact_fact("credit")
         wh.compact_fact("factvideostart")
         gc_fact(wh, "credit")
@@ -203,8 +324,6 @@ def _process_batch(
     # threshold fraction of files — the lakehouse OPTIMIZE scheduler as
     # a streaming callback. Footer-only, O(files) per batch.
     if recluster is not None:
-        from etl__project_spark.plans.star_load import should_recluster
-
         probe_col, layout, threshold = recluster
         trig, _stats = should_recluster(
             wh, "factvideostart", probe_col, threshold
@@ -257,16 +376,11 @@ def stream_star_load(
     (pinned by ``tests/test_streaming.py``).
     """
     wh = ParquetWarehouse(spark, warehouse_root)
-    reader = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("header", True)
-        .option("quote", '"')
-        .option("escape", "\\")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.csv(landing_dir)
-    writer = raw.writeStream.foreachBatch(
+    return _fold_stream(
+        spark,
+        RAW_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
         lambda df, bid: _process_batch(
             df,
             bid,
@@ -277,13 +391,12 @@ def stream_star_load(
             recluster,
             join_stats_sources,
             broadcast_row_limit,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+        ),
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
+        processing_time=processing_time,
+        csv=True,
+    )
 
 
 # --- streaming CDC view ----------------------------------------------------
@@ -318,8 +431,7 @@ def stream_cdc_apply(
     Per micro-batch: (1) compact the batch to its latest change per key
     KEEPING tombstones, (2) merge against the stored state by re-running
     the same latest-wins rank over state ∪ delta — correct because
-    latest-wins is associative — and (3) publish exactly-once via the
-    warehouse's merged-batch-id protocol (a replayed batch no-ops).
+    latest-wins is associative.
 
     The state table retains winning tombstones rather than erasing
     their keys, so a late lower-sequence update for a deleted key
@@ -330,37 +442,19 @@ def stream_cdc_apply(
 
     Scale shape per batch: one key exchange over the DELTA for the
     compaction, then a merge whose cost is O(state ∩ touched keys) when
-    the state table is bucketed by key — the same incremental-state
-    discipline as ``_maintain_rollup``/``_maintain_hll``.
+    the state table is bucketed by key.
     """
-    from etl__project_spark.operators.merge import cdc_apply
-
     wh = ParquetWarehouse(spark, warehouse_root)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["id"], seq_cols=["seq"], drop_deletes=False
-        )
-        wh.publish_merged(
-            "cdc_view",
-            compact,
-            CDC_SCHEMA,
-            str(batch_id),
-            lambda existing, delta: cdc_apply(
-                existing.unionByName(delta),
-                key_cols=["id"],
-                seq_cols=["seq"],
-                drop_deletes=False,
-            ),
-        )
-
-    changes = spark.readStream.schema(CDC_SCHEMA).json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        wh,
+        "cdc_view",
+        CDC_SCHEMA,
+        lambda batch: _latest_per_key(batch, "id"),
+        _latest_wins_merge("id"),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming transition-matrix maintenance --------------------------------
@@ -408,20 +502,16 @@ def stream_transition_matrix(
     transitions by joining each user's batch-FIRST event against the
     cursor; (3) fold both into the counts table (merge = sum per cell —
     associative, so replays and shard merges are safe) and advance the
-    cursor (merge = latest-wins per user, the ``cdc_apply`` rank). Both
-    folds go through ``publish_merged``, so a replayed batch no-ops.
+    cursor (merge = latest-wins per user, the ``cdc_apply`` rank).
+    Publish order: counts → cursor.
 
-    Assumes per-user event-time monotonicity ACROSS batches (ordered
-    ingestion, the file-source norm); within a batch any order is fine
-    — the window sorts. Out-of-order sources first run the stream
-    through ``dedup_within_watermark``/a sort buffer, or accept that a
+    Out-of-order sources first run the stream through
+    ``dedup_within_watermark``/a sort buffer, or accept that a
     boundary-late event attributes its transition to arrival order —
     the same trade a Flink CEP pipeline makes without an event-time
     buffer. Cursor state is one row per user (bounded); counts are
     |types|² cells.
     """
-    from etl__project_spark.operators.merge import cdc_apply
-
     wh = ParquetWarehouse(spark, warehouse_root)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
@@ -459,40 +549,22 @@ def stream_transition_matrix(
             delta,
             TM_COUNTS_SCHEMA,
             f"{batch_id}:counts",
-            lambda existing, d: existing.unionByName(d)
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("n").alias("n")),
+            _agg_merge(["from_type", "to_type"], n=_sum),
         )
         # latest-wins within the batch first: the cursor fold merges one
         # candidate per user, not the whole batch (review finding r6)
-        wd = Window.partitionBy("user_id").orderBy(
-            F.desc("ts"), F.desc("event_id")
-        )
-        lasts = (
-            batch.withColumn("__rn", F.row_number().over(wd))
-            .filter(F.col("__rn") == 1)
-            .select("user_id", "ts", "event_id", "event_type")
-        )
+        seq = ("ts", "event_id")
         wh.publish_merged(
             "tm_cursor",
-            lasts,
+            _latest_per_key(batch, "user_id", seq).select(TM_CURSOR_SCHEMA.names),
             TM_CURSOR_SCHEMA,
             f"{batch_id}:cursor",
-            lambda existing, d: cdc_apply(
-                existing.withColumn("op", F.lit("U"))
-                .unionByName(d.withColumn("op", F.lit("U"))),
-                key_cols=["user_id"],
-                seq_cols=["ts", "event_id"],
-            ).drop("op"),
+            _latest_wins_merge("user_id", seq),
         )
 
-    events = spark.readStream.schema(TM_EVENT_SCHEMA).json(landing_dir)
-    writer = events.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming signed join-view maintenance ---------------------------------
@@ -533,8 +605,7 @@ def stream_join_view_cdc(
 ):
     """Maintain the join view ``static_a ⋈ B`` while B arrives as a CDC
     changelog stream (JSON lines of ``CDC_SCHEMA``: id/seq/op/v) — the
-    streaming face of ``operators/ivm.py``'s signed-delta IVM, wired
-    through ``foreachBatch`` + the warehouse's exactly-once merges.
+    streaming face of ``operators/ivm.py``'s signed-delta IVM.
 
     Per micro-batch: (1) compact the batch latest-wins per key KEEPING
     tombstones (``cdc_apply``); (2) translate to signed row deltas
@@ -542,29 +613,16 @@ def stream_join_view_cdc(
     images retract, post-images assert); (3) signed-join the delta
     against the static side (A never re-joins B's history — two of the
     three delta terms vanish when only B churns); (4) fold the view and
-    B's state through ``publish_merged`` consolidations.
+    B's state through ``publish_merged`` consolidations. Publish order:
+    view → state.
 
-    Crash ordering: the VIEW merges before B's state — the view's delta
-    is a deterministic function of (batch, pre-batch B state), so a
-    crash between the two publishes replays to the identical delta (B
-    unchanged), the view merge no-ops on its batch id, and B catches
-    up. Publishing B first would poison the replayed delta (retractions
-    computed against the already-advanced state).
-
-    Assumes per-key monotone ``seq`` across batches (ordered changelog,
-    the Kafka-partition / Debezium-LSN norm); the batch twin
-    ``tpch_join_cdc_incremental`` and the property tests pin the
-    algebra, this pins the production shape. Per-batch cost: one key
-    exchange to compact the delta, one broadcast/bucketed probe of A,
-    and consolidations that touch only keys the delta touched when the
-    state tables are bucketed by key.
+    The batch twin ``tpch_join_cdc_incremental`` and the property tests
+    pin the algebra, this pins the production shape. Per-batch cost: one
+    key exchange to compact the delta, one broadcast/bucketed probe of
+    A, and consolidations that touch only keys the delta touched when
+    the state tables are bucketed by key.
     """
-    from etl__project_spark.operators.ivm import (
-        _signed_join,
-        cdc_to_signed_delta,
-        consolidate,
-    )
-    from etl__project_spark.operators.merge import cdc_apply
+    from etl__project_spark.operators.ivm import _signed_join, cdc_to_signed_delta
 
     wh = ParquetWarehouse(spark, warehouse_root)
     a_signed = state_checkpoint(
@@ -574,9 +632,7 @@ def stream_join_view_cdc(
     view_schema = _jv_view_schema(static_a)
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["id"], seq_cols=["seq"], drop_deletes=False
-        )
+        compact = _latest_per_key(batch, "id")
         state_b = wh.read("jv_state_b", JV_STATE_SCHEMA)
         delta_b = state_checkpoint(
             cdc_to_signed_delta(
@@ -585,28 +641,15 @@ def stream_join_view_cdc(
             table_sized=False,
         )
         delta_v = _signed_join(a_signed, delta_b, ["id"], "sign")
+        bid = str(batch_id)
+        wh.publish_merged("jv_view", delta_v, view_schema, bid, _consolidate_merge)
         wh.publish_merged(
-            "jv_view",
-            delta_v,
-            view_schema,
-            str(batch_id),
-            lambda ex, d: consolidate(ex.unionByName(d)),
-        )
-        wh.publish_merged(
-            "jv_state_b",
-            delta_b,
-            JV_STATE_SCHEMA,
-            str(batch_id),
-            lambda ex, d: consolidate(ex.unionByName(d)),
+            "jv_state_b", delta_b, JV_STATE_SCHEMA, bid, _consolidate_merge
         )
 
-    changes = spark.readStream.schema(CDC_SCHEMA).json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_leftjoin_view(wh: ParquetWarehouse, static_a: DataFrame) -> DataFrame:
@@ -636,21 +679,15 @@ def stream_leftjoin_view_cdc(
     translate to signed deltas against B's stored state, and fold the
     combined inner + null-extension-transition delta
     (keys crossing 0→>0 retract their placeholders, >0→0 re-assert
-    them) through the warehouse's exactly-once merges.
-
-    Crash ordering matches the inner job: the VIEW merges before B's
-    state, so a replayed batch recomputes the identical delta against
-    the unchanged pre-batch state and no-ops on its batch id. Per-batch
-    cost adds one touched-keys probe of B's state and one signed probe
-    of A to the inner job's plan — O(|Δ| × fan-out).
+    them). Publish order matches the inner job: view → state. Per-batch cost adds one
+    touched-keys probe of B's state and one signed probe of A to the
+    inner job's plan — O(|Δ| × fan-out).
     """
     from etl__project_spark.operators.ivm import (
         cdc_to_signed_delta,
-        consolidate,
         leftjoin_delta_signed,
         leftjoin_init_signed,
     )
-    from etl__project_spark.operators.merge import cdc_apply
 
     wh = ParquetWarehouse(spark, warehouse_root)
     a_signed = state_checkpoint(
@@ -664,13 +701,11 @@ def stream_leftjoin_view_cdc(
         leftjoin_init_signed(a_signed, empty_b, ["id"]),
         view_schema,
         "seed",
-        lambda ex, d: consolidate(ex.unionByName(d)),
+        _consolidate_merge,
     )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["id"], seq_cols=["seq"], drop_deletes=False
-        )
+        compact = _latest_per_key(batch, "id")
         state_b = wh.read("ljv_state_b", JV_STATE_SCHEMA)
         delta_b = state_checkpoint(
             cdc_to_signed_delta(
@@ -679,28 +714,15 @@ def stream_leftjoin_view_cdc(
             table_sized=False,
         )
         delta_v = leftjoin_delta_signed(a_signed, state_b, delta_b, ["id"])
+        bid = str(batch_id)
+        wh.publish_merged("ljv_view", delta_v, view_schema, bid, _consolidate_merge)
         wh.publish_merged(
-            "ljv_view",
-            delta_v,
-            view_schema,
-            str(batch_id),
-            lambda ex, d: consolidate(ex.unionByName(d)),
-        )
-        wh.publish_merged(
-            "ljv_state_b",
-            delta_b,
-            JV_STATE_SCHEMA,
-            str(batch_id),
-            lambda ex, d: consolidate(ex.unionByName(d)),
+            "ljv_state_b", delta_b, JV_STATE_SCHEMA, bid, _consolidate_merge
         )
 
-    changes = spark.readStream.schema(CDC_SCHEMA).json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming retractable-rollup maintenance --------------------------------
@@ -763,18 +785,13 @@ def stream_rollup_cdc(
     post-batch base restricted to touched groups
     (``merge_rollups_minmax_cdc``); (4) merge the (g, v)-grain distinct
     state (``merge_distinct_signed``); (5) advance the base. Publish
-    ordering is rollup → distinct → base (every delta is a
-    deterministic function of the unchanged pre-batch base, so crash
-    replays recompute identical deltas, the done merges no-op on their
-    batch id, and the base catches up last — the
-    ``stream_join_view_cdc`` discipline).
+    order: rollup → distinct → base.
 
     Per-batch cost: one delta-keyed compaction exchange, one probe of
     the key-bucketed base for old images, one touched-group probe for
     the extremes, and bounded-keyspace merges.
     """
-    from etl__project_spark.operators.ivm import cdc_to_signed_delta, consolidate
-    from etl__project_spark.operators.merge import cdc_apply
+    from etl__project_spark.operators.ivm import cdc_to_signed_delta
     from etl__project_spark.operators.rollup import (
         merge_distinct_signed,
         merge_rollups_minmax_cdc,
@@ -787,9 +804,7 @@ def stream_rollup_cdc(
         return df.withColumn("g", F.pmod(F.col("id"), F.lit(3)))
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["id"], seq_cols=["seq"], drop_deletes=False
-        )
+        compact = _latest_per_key(batch, "id")
         base = wh.read("rc_base", JV_STATE_SCHEMA)
         delta = state_checkpoint(
             cdc_to_signed_delta(
@@ -798,14 +813,15 @@ def stream_rollup_cdc(
             table_sized=False,
         )
         post_base = state_checkpoint(
-            consolidate(base.unionByName(delta)), table_sized=True
+            _consolidate_merge(base, delta), table_sized=True
         )
         delta_g = _with_g(delta)
+        bid = str(batch_id)
         wh.publish_merged(
             "rc_rollup",
             delta_g,
             RC_ROLLUP_SCHEMA,
-            str(batch_id),
+            bid,
             lambda ex, d: merge_rollups_minmax_cdc(
                 ex, d, _with_g(post_base), ["g"], value_col="v"
             ),
@@ -814,24 +830,14 @@ def stream_rollup_cdc(
             "rc_distinct",
             partial_distinct_signed(delta_g, ["g"], "v"),
             RC_DISTINCT_SCHEMA,
-            str(batch_id),
+            bid,
             lambda ex, d: merge_distinct_signed(ex, d, ["g"], "v"),
         )
-        wh.publish_merged(
-            "rc_base",
-            delta,
-            JV_STATE_SCHEMA,
-            str(batch_id),
-            lambda ex, d: consolidate(ex.unionByName(d)),
-        )
+        wh.publish_merged("rc_base", delta, JV_STATE_SCHEMA, bid, _consolidate_merge)
 
-    changes = spark.readStream.schema(CDC_SCHEMA).json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming dedup-index maintenance ---------------------------------------
@@ -879,12 +885,9 @@ def stream_dedup_index(
 
     Per micro-batch: shingle + MinHash-sign ONLY the batch, probe the
     stored band table for cross-batch candidates, self-join within the
-    batch, then fold through exactly-once merged publishes — PAIRS
-    before INDEX (the pairs delta is a deterministic function of
-    (batch, pre-batch index), so a crash between the two publishes
-    replays to the identical delta; index-first would make the replayed
-    probe see the batch's own bands and double-report within-batch
-    pairs as cross-batch). A replayed batch no-ops on both tables.
+    batch, then publish pairs → index (index-first would make a replayed
+    probe see the batch's own bands and double-report within-batch pairs
+    as cross-batch).
 
     At 100 TB the band table is stored bucketed by (band_id, band_hash)
     so the probe is bucket-pruned; corpus history is never re-signed.
@@ -919,13 +922,9 @@ def stream_dedup_index(
             lambda ex, d: ex.unionByName(d),
         )
 
-    docs = spark.readStream.schema(DOC_SCHEMA).json(landing_dir)
-    writer = docs.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, DOC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming SCD Type-2 dimension maintenance -----------------------------
@@ -972,10 +971,9 @@ def stream_scd2_dim(
     even the batch version). Each change record carries
     (natural key, attrs, load_date, seq); per micro-batch the current
     dim versions are expired and new versions inserted via the exact
-    batch algorithm, folded through one exactly-once merged publish —
-    a replayed batch no-ops, so redelivery can't double-expire a row
-    or burn surrogate keys (the ``publish_merged`` batch-id ledger is
-    the idempotence, not the algorithm).
+    batch algorithm, folded through one merged publish — the batch-id
+    ledger is what keeps redelivery from double-expiring a row or
+    burning surrogate keys, not the algorithm.
 
     Batches are expected key-disjoint-per-day (the daily-dim-delta
     shape); a batch spanning several load dates applies under its
@@ -1010,17 +1008,13 @@ def stream_scd2_dim(
                 skey_col="skey",
                 load_date=load_date,
                 order_col="seq",
-            ).select([f.name for f in SCD2_DIM_SCHEMA.fields])
+            ).select(SCD2_DIM_SCHEMA.names)
 
         wh.publish_merged("scd2_dim", b, SCD2_DIM_SCHEMA, str(batch_id), merge)
 
-    deltas = spark.readStream.schema(SCD2_DELTA_SCHEMA).json(landing_dir)
-    writer = deltas.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, SCD2_DELTA_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 SCD2M_DELTA_SCHEMA = T.StructType(
@@ -1070,13 +1064,11 @@ def stream_scd2_dim_multi(
     effective ordinal (epoch micros / change sequence) that becomes the
     version interval bound, ``seq`` the unique tiebreak. Per
     micro-batch the whole one-pass multi-version algorithm runs inside
-    ONE exactly-once merged publish — consecutive-dup collapse,
-    no-op-vs-current detection, interval chaining, expiry of the
-    stored current row at the first new version's ordinal — so a
-    replayed batch no-ops and redelivery can neither double-expire nor
-    burn surrogate keys. Assumes per-key ordinal monotonicity ACROSS
-    batches (the ordered-changelog norm, same contract as
-    ``stream_join_view_cdc``'s seq).
+    ONE merged publish — consecutive-dup collapse, no-op-vs-current
+    detection, interval chaining, expiry of the stored current row at
+    the first new version's ordinal — so redelivery can neither
+    double-expire nor burn surrogate keys. Assumes per-key ordinal
+    monotonicity ACROSS batches.
 
     Scale shape per batch: the operator's two delta-keyed window
     stages + broadcast dim probes, inside publish_merged's small-state
@@ -1084,31 +1076,27 @@ def stream_scd2_dim_multi(
     """
     from etl__project_spark.operators.dims import scd2_upsert_multi
 
-    wh = ParquetWarehouse(spark, warehouse_root)
+    def merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
+        return scd2_upsert_multi(
+            existing,
+            delta.select("name", "attr", "ord", "seq"),
+            natural_key="name",
+            attr_cols=["attr"],
+            skey_col="skey",
+            order_col="ord",
+            tiebreak_cols=["seq"],
+        ).select(SCD2M_DIM_SCHEMA.names)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        b = state_checkpoint(batch, table_sized=False)
-
-        def merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
-            return scd2_upsert_multi(
-                existing,
-                delta.select("name", "attr", "ord", "seq"),
-                natural_key="name",
-                attr_cols=["attr"],
-                skey_col="skey",
-                order_col="ord",
-                tiebreak_cols=["seq"],
-            ).select([f.name for f in SCD2M_DIM_SCHEMA.fields])
-
-        wh.publish_merged("scd2m_dim", b, SCD2M_DIM_SCHEMA, str(batch_id), merge)
-
-    deltas = spark.readStream.schema(SCD2M_DELTA_SCHEMA).json(landing_dir)
-    writer = deltas.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "scd2m_dim",
+        SCD2M_DIM_SCHEMA,
+        lambda batch: state_checkpoint(batch, table_sized=False),
+        merge,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, SCD2M_DELTA_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming incremental table statistics ---------------------------------
@@ -1161,8 +1149,8 @@ def stream_column_stats(
     the batch operator's docstring promises).
 
     Per batch, ONE fused aggregate computes every scalar stat and ONE
-    explode pass feeds all columns' HLL registers; both fold through
-    exactly-once merged publishes (replayed batches no-op, and the
+    explode pass feeds all columns' HLL registers; publish order is
+    col_stats → col_ndv (both derive from the batch alone, and the
     register max is idempotent even across ledger resets). State is
     |cols| scalar rows + |cols|·64 register rows — KBs forever.
     """
@@ -1175,9 +1163,7 @@ def stream_column_stats(
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
             aggs += [
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias(f"__nulls_{c}"),
+                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nulls_{c}"),
                 F.min(F.col(c).cast("double")).alias(f"__min_{c}"),
                 F.max(F.col(c).cast("double")).alias(f"__max_{c}"),
             ]
@@ -1193,21 +1179,14 @@ def stream_column_stats(
             for c in cols
         ]
         scalar = one.select(F.explode(F.array(*picks)).alias("s")).select("s.*")
-
-        def merge_scalar(existing: DataFrame, delta: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(delta)
-                .groupBy("column_name")
-                .agg(
-                    F.sum("n_rows").cast("long").alias("n_rows"),
-                    F.sum("n_nulls").cast("long").alias("n_nulls"),
-                    F.min("min_d").alias("min_d"),
-                    F.max("max_d").alias("max_d"),
-                )
-            )
-
         wh.publish_merged(
-            "col_stats", scalar, COLSTATS_SCHEMA, str(batch_id), merge_scalar
+            "col_stats",
+            scalar,
+            COLSTATS_SCHEMA,
+            str(batch_id),
+            _agg_merge(
+                ["column_name"], n_rows=_sum, n_nulls=_sum, min_d=_min, max_d=_max
+            ),
         )
 
         vals = (
@@ -1227,26 +1206,17 @@ def stream_column_stats(
             .select("x.column_name", "x.v")
             .filter(F.col("v").isNotNull())
         )
-        regs = hll_registers_keyed(vals, "column_name", "v")
-
-        def merge_regs(existing: DataFrame, delta: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(delta)
-                .groupBy("column_name", "reg")
-                .agg(F.max("rho").alias("rho"))
-            )
-
         wh.publish_merged(
-            "col_ndv", regs, COLNDV_SCHEMA, str(batch_id), merge_regs
+            "col_ndv",
+            hll_registers_keyed(vals, "column_name", "v"),
+            COLNDV_SCHEMA,
+            str(batch_id),
+            _agg_merge(["column_name", "reg"], rho=_max),
         )
 
-    rows = spark.readStream.schema(schema).json(landing_dir)
-    writer = rows.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, schema, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming ANN (PQ) index maintenance -----------------------------------
@@ -1343,13 +1313,9 @@ def stream_ann_index(
         codes = pq_encode(b, read_ann_codebooks(wh))
         wh.fact_append("ann_codes", codes, str(batch_id))
 
-    emb = spark.readStream.schema(EMB_SCHEMA).json(landing_dir)
-    writer = emb.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, EMB_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming daily-series monitor maintenance -----------------------------
@@ -1395,36 +1361,22 @@ def stream_daily_counts(
     forever).
 
     Per-day counts are the simplest mergeable statistic (counts sum),
-    so the fold is one bounded groupBy per batch through the exactly-
-    once merged publish: replayed batches no-op via the batch-id
-    ledger, late rows for an already-seen day just add to that day's
-    count on their own batch's fold.
+    so the fold is one bounded groupBy per batch; late rows for an
+    already-seen day just add to that day's count on their own batch's
+    fold.
     """
-    wh = ParquetWarehouse(spark, warehouse_root)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        delta = batch.groupBy(F.to_date(ts_col).alias("day")).agg(
-            F.count(F.lit(1)).cast("long").alias("x")
-        )
-
-        def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(delta_df)
-                .groupBy("day")
-                .agg(F.sum("x").cast("long").alias("x"))
-            )
-
-        wh.publish_merged(
-            "daily_counts", delta, DAILY_COUNTS_SCHEMA, str(batch_id), merge
-        )
-
-    rows = spark.readStream.schema(schema).json(landing_dir)
-    writer = rows.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "daily_counts",
+        DAILY_COUNTS_SCHEMA,
+        lambda batch: batch.groupBy(F.to_date(ts_col).alias("day")).agg(
+            F.count(F.lit(1)).alias("x")
+        ),
+        _agg_merge(["day"], x=_sum),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, schema, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming survival-curve (per-user conversion) maintenance -------------
@@ -1472,51 +1424,30 @@ def stream_user_conversion(
     the stream.
 
     All three statistics are mergeable min/max folds, so the merge is
-    one per-user aggregate through the exactly-once merged publish:
-    replayed batches no-op via the batch-id ledger; a user whose first
-    sighting and conversion arrive in DIFFERENT batches converges to
-    the same row as a one-shot fold (mins and maxes commute across
-    batch boundaries). The conversion predicate is the shared
+    one per-user aggregate: a user whose first sighting and conversion
+    arrive in DIFFERENT batches converges to the same row as a one-shot
+    fold (mins and maxes commute across batch boundaries). The
+    conversion predicate is the shared
     ``operators/series.py:big_ticket``, the same expression the batch
     query and the A/B tests use.
     """
     from etl__project_spark.operators.series import big_ticket
 
-    wh = ParquetWarehouse(spark, warehouse_root)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        delta = batch.groupBy("user_id").agg(
-            F.min(F.to_date(ts_col)).alias("first_day"),
-            F.min(F.when(big_ticket(), F.to_date(ts_col))).alias("conv_day"),
-            F.max(F.to_date(ts_col)).alias("last_day"),
-        )
-
-        def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(delta_df)
-                .groupBy("user_id")
-                .agg(
-                    F.min("first_day").alias("first_day"),
-                    F.min("conv_day").alias("conv_day"),
-                    F.max("last_day").alias("last_day"),
-                )
-            )
-
-        wh.publish_merged(
-            "user_conversion",
-            delta,
-            USER_CONVERSION_SCHEMA,
-            str(batch_id),
-            merge,
-        )
-
-    rows = spark.readStream.schema(schema).json(landing_dir)
-    writer = rows.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    day = F.to_date(ts_col)
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "user_conversion",
+        USER_CONVERSION_SCHEMA,
+        lambda batch: batch.groupBy("user_id").agg(
+            F.min(day).alias("first_day"),
+            F.min(F.when(big_ticket(), day)).alias("conv_day"),
+            F.max(day).alias("last_day"),
+        ),
+        _agg_merge(["user_id"], first_day=_min, conv_day=_min, last_day=_max),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, schema, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming privacy-gate (QI band-count) maintenance ---------------------
@@ -1584,36 +1515,22 @@ def stream_qi_counts(
     always current.
 
     Counts are the simplest mergeable statistic (sums), so the fold is
-    one bounded groupBy per batch through the exactly-once merged
-    publish — the ``stream_daily_counts`` pattern at QI grain;
-    replayed batches no-op via the batch-id ledger. The banding is the
-    shared ``operators/quality.py:qi_band_counts``, the same
-    expression the batch queries aggregate with."""
+    one bounded groupBy per batch — the ``stream_daily_counts`` pattern
+    at QI grain. The banding is the shared
+    ``operators/quality.py:qi_band_counts``, the same expression the
+    batch queries aggregate with."""
     from etl__project_spark.operators.quality import qi_band_counts
 
-    wh = ParquetWarehouse(spark, warehouse_root)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        delta = qi_band_counts(batch)
-
-        def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(delta_df)
-                .groupBy(*_QI_KEYS)
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-
-        wh.publish_merged(
-            "qi_counts", delta, QI_COUNTS_SCHEMA, str(batch_id), merge
-        )
-
-    rows = spark.readStream.schema(schema).json(landing_dir)
-    writer = rows.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "qi_counts",
+        QI_COUNTS_SCHEMA,
+        qi_band_counts,
+        _agg_merge(_QI_KEYS, n=_sum),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, schema, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming word-co-occurrence-graph maintenance --------------------------
@@ -1653,32 +1570,22 @@ def stream_word_graph(
 
     Edges don't cross document boundaries, so per-batch edge sets
     union-distinct to exactly the one-shot graph regardless of how
-    documents were batched (pinned by test); a replayed batch is a
-    subset and no-ops both via the distinct and the batch-id ledger.
-    At 100 TB the edge table is vocabulary-bounded, the merge is one
-    vocab-sized distinct per batch, and storage would be bucketed by
-    src for the downstream joins."""
+    documents were batched (pinned by test). At 100 TB the edge table
+    is vocabulary-bounded, the merge is one vocab-sized distinct per
+    batch, and storage would be bucketed by src for the downstream
+    joins."""
     from etl__project_spark.datapipe.graph import word_cooccur_edges
 
-    wh = ParquetWarehouse(spark, warehouse_root)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        delta = word_cooccur_edges(batch, checkpoint=False)
-        wh.publish_merged(
-            "word_edges",
-            delta,
-            WORD_EDGES_SCHEMA,
-            str(batch_id),
-            lambda ex, d: ex.unionByName(d).distinct(),
-        )
-
-    docs = spark.readStream.schema(DOC_SCHEMA).json(landing_dir)
-    writer = docs.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "word_edges",
+        WORD_EDGES_SCHEMA,
+        lambda batch: word_cooccur_edges(batch, checkpoint=False),
+        lambda ex, d: ex.unionByName(d).distinct(),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, DOC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
+    )
 
 
 # --- streaming behavioral-bot-screen maintenance -----------------------------
@@ -1736,14 +1643,9 @@ def stream_bot_screen(
     one-shot scan exactly (pinned by test) and the serve path
     finalizes through the shared ``bot_scorecard``.
 
-    Both folds go through exactly-once merged publishes (stats:
-    per-user sums — associative; cursor: latest-wins), so replayed
-    batches no-op. Assumes per-user event-time monotonicity ACROSS
-    batches, the file-source norm (same contract as the transition
-    cursor). State is one stats row + one cursor row per user."""
+    Publish order: stats → cursor (stats: per-user sums; cursor:
+    latest-wins). State is one stats row + one cursor row per user."""
     from pyspark.sql import Window
-
-    from etl__project_spark.operators.merge import cdc_apply
 
     wh = ParquetWarehouse(spark, warehouse_root)
 
@@ -1767,62 +1669,37 @@ def stream_bot_screen(
             cursor.select("user_id", F.unix_micros("ts").alias("cur_us")),
             "user_id",
         ).select("user_id", (F.col("first_us") - F.col("cur_us")).alias("d"))
+        # Σd² over decimal(18,0) squares sums to decimal(38,0), exactly
         delta = (
             within.unionByName(boundary)
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_gaps"),
-                F.sum("d").cast("long").alias("span_us"),
-                F.sum(dec(F.col("d")) * dec(F.col("d")))
-                .cast("decimal(38,0)")
-                .alias("d2"),
+                F.sum("d").alias("span_us"),
+                F.sum(dec(F.col("d")) * dec(F.col("d"))).alias("d2"),
             )
         )
-
-        def merge_stats(existing: DataFrame, d: DataFrame) -> DataFrame:
-            return (
-                existing.unionByName(d)
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_gaps").cast("long").alias("n_gaps"),
-                    F.sum("span_us").cast("long").alias("span_us"),
-                    F.sum("d2").cast("decimal(38,0)").alias("d2"),
-                )
-            )
-
         wh.publish_merged(
-            "bot_stats", delta, BOT_STATS_SCHEMA, f"{batch_id}:stats", merge_stats
+            "bot_stats",
+            delta,
+            BOT_STATS_SCHEMA,
+            f"{batch_id}:stats",
+            _agg_merge(["user_id"], n_gaps=_sum, span_us=_sum, d2=_sum),
         )
         # latest-wins WITHIN the batch first (one row per user), so the
         # cursor fold merges |users| candidates, not |batch| rows
-        wd = Window.partitionBy("user_id").orderBy(
-            F.desc(F.unix_micros("ts")), F.desc("event_id")
-        )
-        lasts = (
-            batch.withColumn("__rn", F.row_number().over(wd))
-            .filter(F.col("__rn") == 1)
-            .select("user_id", "ts", "event_id")
-        )
+        seq = ("ts", "event_id")
         wh.publish_merged(
             "bot_cursor",
-            lasts,
+            _latest_per_key(batch, "user_id", seq).select(BOT_CURSOR_SCHEMA.names),
             BOT_CURSOR_SCHEMA,
             f"{batch_id}:cursor",
-            lambda existing, d: cdc_apply(
-                existing.withColumn("op", F.lit("U"))
-                .unionByName(d.withColumn("op", F.lit("U"))),
-                key_cols=["user_id"],
-                seq_cols=["ts", "event_id"],
-            ).drop("op"),
+            _latest_wins_merge("user_id", seq),
         )
 
-    events = spark.readStream.schema(TM_EVENT_SCHEMA).json(landing_dir)
-    writer = events.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming text-index (BM25 postings) maintenance ------------------------
@@ -1889,25 +1766,18 @@ def stream_text_index_cdc(
     latest-wins compaction by doc (tombstones kept), then a
     ``publish_merged`` whose merge callback computes the signed posting
     delta against the PRE-batch stored state (one doc-key probe; only
-    the batch's post-images tokenize) and consolidates. Exactly-once:
-    the delta is derived INSIDE the merge from that table's own
-    pre-state, so a replayed batch either no-ops (already merged) or
-    recomputes the identical delta — there is no cross-table partial
-    state to resurrect (the dl/df/stats views derive at read time,
-    :func:`read_text_index`).
+    the batch's post-images tokenize) and consolidates. The delta is
+    derived INSIDE the merge from that table's own pre-state, so there
+    is no cross-table partial state to resurrect (the dl/df/stats views
+    derive at read time, :func:`read_text_index`).
 
-    ORDERED-TRANSPORT contract: because retractions derive from the
-    pre-batch state (not from before-images), cross-batch delivery must
-    follow changelog order — Kafka gives this per partition-key; the
-    file source orders by mtime, so producers must not tie (see the
+    Because retractions derive from the pre-batch state (not from
+    before-images), cross-batch delivery must follow changelog order:
+    the file source orders by mtime, so producers must not tie (see the
     text-index soak). The per-doc ``seq`` resolves order only WITHIN a
     micro-batch. The commutative sketch folds below have no such
     requirement."""
     from etl__project_spark.datapipe.text_index import _doc_parts
-    from etl__project_spark.operators.ivm import consolidate
-    from etl__project_spark.operators.merge import cdc_apply
-
-    wh = ParquetWarehouse(spark, warehouse_root)
 
     def _merge(existing: DataFrame, batch: DataFrame) -> DataFrame:
         touched = batch.select("doc_id").distinct()
@@ -1919,30 +1789,24 @@ def stream_text_index_cdc(
         delta = retract.unionByName(
             new_post.select("*", F.lit(1).cast("long").alias("sign"))
         )
-        return consolidate(existing.unionByName(delta))
+        return _consolidate_merge(existing, delta)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["doc_id"], seq_cols=["seq"], drop_deletes=False
-        )
-        wh.publish_merged(
-            "text_postings",
-            compact,
-            TEXT_POSTINGS_SCHEMA,
-            str(batch_id),
-            _merge,
-        )
-
-    reader = spark.readStream.schema(TEXT_CDC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "text_postings",
+        TEXT_POSTINGS_SCHEMA,
+        lambda batch: _latest_per_key(batch, "doc_id"),
+        _merge,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark,
+        TEXT_CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        apply,
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 # --- streaming positional phrase-index maintenance ----------------------------
@@ -1986,21 +1850,13 @@ def stream_phrase_index_cdc(
     (tombstones kept), then a ``publish_merged`` whose merge callback
     derives the signed positional delta against the PRE-batch stored
     state (one doc-key probe retracts the touched docs' rows; ONLY the
-    batch's post-images re-tokenize) and consolidates. Exactly-once:
-    the delta is derived INSIDE the merge from that table's own
-    pre-state, so a replayed batch either no-ops (already merged) or
-    recomputes the identical delta. Same ordered-transport contract as
-    :func:`stream_text_index_cdc` (retractions derive from pre-state,
-    so cross-batch delivery must follow changelog order). State is the
-    versioned warehouse parquet table itself — durable on disk, never
-    driver memory; at 100 TB it is a table bucketed by doc_id
+    batch's post-images re-tokenize) and consolidates. Same
+    ordered-transport contract as :func:`stream_text_index_cdc`. State
+    is the versioned warehouse parquet table itself — durable on disk,
+    never driver memory; at 100 TB it is a table bucketed by doc_id
     (co-locating ``phrase_match``'s adjacency joins) and
     partition-pruned by term."""
     from etl__project_spark.datapipe.text_index import positional_postings
-    from etl__project_spark.operators.ivm import consolidate
-    from etl__project_spark.operators.merge import cdc_apply
-
-    wh = ParquetWarehouse(spark, warehouse_root)
 
     def _merge(existing: DataFrame, batch: DataFrame) -> DataFrame:
         touched = batch.select("doc_id").distinct()
@@ -2011,32 +1867,24 @@ def stream_phrase_index_cdc(
         new_post = positional_postings(post).select(
             "*", F.lit(1).cast("long").alias("sign")
         )
-        return consolidate(
-            existing.unionByName(retract).unionByName(new_post)
-        )
+        return _consolidate_merge(existing, retract.unionByName(new_post))
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["doc_id"], seq_cols=["seq"], drop_deletes=False
-        )
-        wh.publish_merged(
-            "positional_postings",
-            compact,
-            POSITIONAL_POSTINGS_SCHEMA,
-            str(batch_id),
-            _merge,
-        )
-
-    reader = spark.readStream.schema(TEXT_CDC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "positional_postings",
+        POSITIONAL_POSTINGS_SCHEMA,
+        lambda batch: _latest_per_key(batch, "doc_id"),
+        _merge,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark,
+        TEXT_CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        apply,
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 # --- streaming IVF posting maintenance -----------------------------------------
@@ -2095,14 +1943,11 @@ def stream_ivf_cdc(
     ``publish_merged`` whose merge callback retracts the touched
     vectors' postings from the PRE-batch state (one id probe) and
     scores ONLY the batch's post-images against the broadcast
-    centroids; unchanged vectors are never re-scored. Exactly-once via
-    the merged-batch ledger; same ordered-transport contract as
-    :func:`stream_text_index_cdc` (retractions derive from pre-state).
+    centroids; unchanged vectors are never re-scored. Same
+    ordered-transport contract as :func:`stream_text_index_cdc`.
     At 100 TB the cells table is bucketed by centroid_id so a top-k
     probe reads only the probed cells' buckets."""
     from etl__project_spark.datapipe.similarity import assign_cells
-    from etl__project_spark.operators.ivm import consolidate
-    from etl__project_spark.operators.merge import cdc_apply
 
     wh = ParquetWarehouse(spark, warehouse_root)
 
@@ -2133,28 +1978,24 @@ def stream_ivf_cdc(
             F.col("centroid_id").cast("long"),
             F.lit(1).cast("long").alias("sign"),
         )
-        return consolidate(
-            existing.unionByName(retract).unionByName(assert_c)
-        )
+        return _consolidate_merge(existing, retract.unionByName(assert_c))
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = cdc_apply(
-            batch, key_cols=["vec_id"], seq_cols=["seq"], drop_deletes=False
-        )
-        wh.publish_merged(
-            "ivf_cells", compact, IVF_CELLS_SCHEMA, str(batch_id), _merge
-        )
-
-    reader = spark.readStream.schema(EMB_CDC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        wh,
+        "ivf_cells",
+        IVF_CELLS_SCHEMA,
+        lambda batch: _latest_per_key(batch, "vec_id"),
+        _merge,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark,
+        EMB_CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        apply,
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
+    )
 
 
 # --- streaming retractable-histogram maintenance ------------------------------
@@ -2233,8 +2074,7 @@ def stream_value_histogram_cdc(
     every changelog row contributes its signed rows (before-image −1,
     after-image +1) and the fold is one bounded hash-agg per batch,
     order-independent even within a batch (I then U of the same event
-    nets to the U's after-image). Exactly-once via the batch-id ledger
-    (a replayed batch no-ops); quantiles serve from the maintained
+    nets to the U's after-image). Quantiles serve from the maintained
     table (:func:`read_value_quantiles`) at O(buckets).
 
     State is bounded by (event types × live buckets) FOREVER — the
@@ -2245,7 +2085,16 @@ def stream_value_histogram_cdc(
         partial_hist_signed,
     )
 
-    wh = ParquetWarehouse(spark, warehouse_root)
+    fold = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "value_hist",
+        VALUE_HIST_SCHEMA,
+        lambda batch: partial_hist_signed(
+            _signed_images(batch, ["event_type", "value"], {"value": "old_value"}),
+            ["event_type"],
+        ),
+        lambda ex, d: merge_hist_signed(ex, d, ["event_type"]),
+    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
@@ -2255,40 +2104,21 @@ def stream_value_histogram_cdc(
             # permanent, so fail the batch loudly rather than skip it
             # (ADVICE r8 — silent drop made the state unhealable).
             _require_before_images(batch, "old_value", "value_hist")
-            retract = batch.filter(F.col("op").isin("U", "D")).select(
-                "event_type",
-                F.col("old_value").alias("value"),
-                F.lit(-1).cast("long").alias("sign"),
-            )
-            assert_ = batch.filter(F.col("op") != "D").select(
-                "event_type", "value", F.lit(1).cast("long").alias("sign")
-            )
-            delta = partial_hist_signed(
-                retract.unionByName(assert_), ["event_type"]
-            )
-
-            def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-                return merge_hist_signed(existing, delta_df, ["event_type"])
-
-            wh.publish_merged(
-                "value_hist", delta, VALUE_HIST_SCHEMA, str(batch_id), merge
-            )
+            fold(batch, batch_id)
         finally:
             batch.unpersist()
 
-    reader = spark.readStream.schema(VALUE_CDC_SCHEMA)
-    if max_files_per_trigger is not None:
-        # soak/pacing knob: availableNow honors source rate limits, so one
-        # query run replays the landing dir as many real micro-batches —
-        # the streaming-depth fixture of tests/test_soak.py
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    # max_files_per_trigger paces a soak: one availableNow run replays
+    # the landing dir as many real micro-batches (tests/test_soak.py)
+    return _fold_stream(
+        spark,
+        VALUE_CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        _apply,
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming turnstile-CMS maintenance --------------------------------------
@@ -2344,16 +2174,23 @@ def stream_cms_cdc(
     maintenance. Like the histogram stream the sketch is LINEAR in the
     changelog (cells are signed sums), so there is no compaction and no
     state probe: before-images contribute −1 cells, after-images +1,
-    one bounded hash-agg per batch folded into the fixed d×w grid
-    through the exactly-once merged publish. The no-underestimate
-    pruning guarantee survives any prefix of the stream whose net
-    per-key counts are non-negative."""
+    one bounded hash-agg per batch folded into the fixed d×w grid. The
+    no-underestimate pruning guarantee survives any prefix of the
+    stream whose net per-key counts are non-negative."""
     from etl__project_spark.datapipe.sketches import (
         cms_cells_signed,
         cms_merge_signed,
     )
 
-    wh = ParquetWarehouse(spark, warehouse_root)
+    fold = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "cms_cells",
+        CMS_CELLS_SCHEMA,
+        lambda batch: cms_cells_signed(
+            _signed_images(batch, ["key"], {"key": "old_key"}), "key"
+        ),
+        cms_merge_signed,
+    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
@@ -2361,34 +2198,19 @@ def stream_cms_cdc(
             # Same loud-failure posture as the histogram stream: the grid
             # cannot self-heal a missed retraction (ADVICE r8).
             _require_before_images(batch, "old_key", "cms_cells")
-            retract = batch.filter(F.col("op").isin("U", "D")).select(
-                F.col("old_key").alias("key"),
-                F.lit(-1).cast("long").alias("sign"),
-            )
-            assert_ = batch.filter(F.col("op") != "D").select(
-                "key", F.lit(1).cast("long").alias("sign")
-            )
-            delta = cms_cells_signed(retract.unionByName(assert_), "key")
-
-            def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-                return cms_merge_signed(existing, delta_df)
-
-            wh.publish_merged(
-                "cms_cells", delta, CMS_CELLS_SCHEMA, str(batch_id), merge
-            )
+            fold(batch, batch_id)
         finally:
             batch.unpersist()
 
-    reader = spark.readStream.schema(KEY_CDC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _fold_stream(
+        spark,
+        KEY_CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        _apply,
+        available_now,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- streaming ANALYZE-statistics maintenance ---------------------------------
@@ -2452,39 +2274,23 @@ def stream_column_stats_cdc(
     after-image +1 per tracked column), so like the histogram/CMS
     streams the fold is one explode + hash-agg per batch with no state
     probe; deletes that remove a column's extremum or a value's last
-    occurrence re-balance at read time by construction. Exactly-once
-    via the batch-id ledger; stats serve from
-    :func:`read_column_stats_cdc` at O(state)."""
+    occurrence re-balance at read time by construction. Stats serve
+    from :func:`read_column_stats_cdc` at O(state)."""
     from etl__project_spark.operators.quality import (
         column_value_partial,
         merge_column_values,
     )
 
-    wh = ParquetWarehouse(spark, warehouse_root)
     cols = ["q", "f"]
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        retract = batch.filter(F.col("op").isin("U", "D")).select(
-            F.col("old_q").alias("q"),
-            F.col("old_f").alias("f"),
-            F.lit(-1).cast("long").alias("sign"),
-        )
-        assert_ = batch.filter(F.col("op") != "D").select(
-            "q", "f", F.lit(1).cast("long").alias("sign")
-        )
-        delta = column_value_partial(retract.unionByName(assert_), cols)
-
-        def merge(existing: DataFrame, delta_df: DataFrame) -> DataFrame:
-            return merge_column_values(existing, delta_df)
-
-        wh.publish_merged(
-            "col_stats_state", delta, COLSTATS_STATE_SCHEMA, str(batch_id), merge
-        )
-
-    changes = spark.readStream.schema(COLSTATS_CDC_SCHEMA).json(landing_dir)
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    apply = _fold_into(
+        ParquetWarehouse(spark, warehouse_root),
+        "col_stats_state",
+        COLSTATS_STATE_SCHEMA,
+        lambda batch: column_value_partial(
+            _signed_images(batch, cols, {"q": "old_q", "f": "old_f"}), cols
+        ),
+        merge_column_values,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _fold_stream(
+        spark, COLSTATS_CDC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
+    )

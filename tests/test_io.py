@@ -151,11 +151,12 @@ def test_schema_cache_reinfers_after_part_file_overwritten_in_place(spark, tmp_p
     """A directory table's cached schema is keyed on its files, not on
     the directory's own stat: overwriting a part file in place (which
     leaves the directory's mtime alone) must re-infer, never serve the
-    stale schema."""
+    stale schema. A re-inferred schema replaces the path's entry, so
+    the cache holds one entry per path however often it changes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from etl__project_spark.sources.tables import load_table
+    from etl__project_spark.sources.tables import _SCHEMA_CACHE, load_table
 
     tdir = tmp_path / "t.parquet"
     tdir.mkdir()
@@ -169,3 +170,10 @@ def test_schema_cache_reinfers_after_part_file_overwritten_in_place(spark, tmp_p
     df = load_table(spark, str(tmp_path), "t")
     assert df.columns == ["a", "b"]
     assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+    pq.write_table(pa.table({"a": [4], "b": ["y"], "c": [1.5]}), part)
+    os.utime(tdir, ns=(dir_mtime, dir_mtime))
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b", "c"]
+    assert [tuple(r) for r in df.collect()] == [(4, "y", 1.5)]
+    assert sum(str(tdir) in repr(k) for k in _SCHEMA_CACHE) == 1

@@ -884,6 +884,64 @@ def test_versioned_tables_commit_through_one_protocol():
     }, sites
 
 
+def test_streams_start_through_one_runner():
+    """In the style of the commit-protocol gate: in
+    ``streaming/pipeline.py`` only ``_fold_stream`` touches the stream
+    plumbing (``readStream``, ``writeStream``, ``foreachBatch``,
+    ``checkpointLocation``, ``trigger``), and every top-level
+    ``stream_*`` returns a ``_fold_stream(...)`` call. Twenty-two folds
+    once each hand-copied that plumbing, and five carried their own
+    backpressure branch."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl__project_spark"
+    tree = ast.parse((pkg / "streaming" / "pipeline.py").read_text())
+    plumbing = {
+        "readStream", "writeStream", "foreachBatch", "checkpointLocation", "trigger"
+    }
+    sites = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.value if isinstance(node, ast.Constant)
+                else None
+            )
+            if name in plumbing:
+                sites.append(owner)
+    assert set(sites) == {"_fold_stream"}, sites
+
+    def own_returns(fn):
+        todo, found = list(fn.body), []
+        while todo:
+            node = todo.pop()
+            if isinstance(node, ast.Return):
+                found.append(node)
+            elif not isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                todo.extend(ast.iter_child_nodes(node))
+        return found
+
+    streams = [
+        fn for fn in tree.body
+        if isinstance(fn, ast.FunctionDef) and fn.name.startswith("stream_")
+    ]
+    assert len(streams) == 22
+    bad = [
+        fn.name
+        for fn in streams
+        if not isinstance(fn.body[-1], ast.Return)
+        or any(
+            not isinstance(r.value, ast.Call)
+            or ast.unparse(r.value.func) != "_fold_stream"
+            for r in own_returns(fn)
+        )
+    ]
+    assert not bad, bad
+
+
 def test_no_duplicate_top_level_definitions():
     """A same-file redefinition silently shadows the earlier function —
     round 10 found TWO stacked instances: a second read_column_stats in

@@ -953,6 +953,42 @@ def test_failed_commit_leaves_no_trace_and_next_publish_commits(
     assert sorted(r["x"] for r in wh.read("t", schema).collect()) == want
 
 
+def test_publish_merged_rejects_a_merge_that_drifts_the_declared_type(
+    spark, tmp_path
+):
+    """A merge whose output type differs from the declared schema raises
+    ValueError before claiming (read-time casts used to hide the drift):
+    CURRENT stays, no v2/, no v2.meta, no held claim, and the batch id
+    stays unmerged so a fixed merge can still fold it."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    schema = T.StructType(
+        [T.StructField("g", T.LongType()), T.StructField("total", T.DecimalType(18, 2))]
+    )
+    seed = spark.createDataFrame([(1, 1)], "g long, total long").select(
+        "g", F.col("total").cast("decimal(18,2)").alias("total")
+    )
+    assert wh.publish_merged(
+        "t", seed, schema, "b1", lambda old, new: old.unionByName(new)
+    )
+
+    def drifting(old, new):  # Σ decimal(18,2) · decimal(18,2) → decimal(38,4)
+        return old.unionByName(new).groupBy("g").agg(
+            F.sum(F.col("total") * F.col("total")).alias("total")
+        )
+
+    with pytest.raises(ValueError, match=r"decimal\(38,4\).*decimal\(18,2\)"):
+        wh.publish_merged("t", seed, schema, "b2", drifting)
+    tdir = tmp_path / "wh" / "t"
+    assert wh._current("t") == 1
+    assert not (tdir / "v2").exists()
+    assert not (tdir / "v2.meta").exists()
+    assert not (tdir / "v2.claim").exists()
+    assert wh._merged_ids("t") == {"b1"}
+
+
 def test_publish_delta_refuses_directory_partitioned_base(spark, tmp_path):
     """A base published under an equal-width Z-order layout keeps its
     rows in partition subdirectories; a flat delta beside them would make
