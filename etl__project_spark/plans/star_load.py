@@ -960,7 +960,9 @@ def should_recluster(
     (``operators/layout.py:zone_read_amplification``): a
     mean_read_fraction above ``threshold`` means a typical point
     predicate on ``column`` opens more than that fraction of files —
-    re-cluster; a fresh Z-ordered table sits near 1/n_files. Returns
+    re-cluster; a fresh Z-ordered table sits near 1/n_files. The
+    statistic is weighted by files, so erosion grows with the number of
+    files each append writes, not only with its rows. Returns
     (trigger, measured stats); a table with no live files never
     triggers."""
     from etl__project_spark.operators.layout import zone_read_amplification

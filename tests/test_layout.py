@@ -31,9 +31,8 @@ from etl__project_spark.sources import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def _quantized_events(spark):
+def _quantize(ev):
     """The exact (ub, vb) quantization ev_zorder_layout/prune_audit use."""
-    ev = load_table(spark, SF, "events").select("user_id", "value")
     return ev.select(
         F.least(F.col("user_id"), F.lit(255)).cast("long").alias("ub"),
         F.least(
@@ -42,6 +41,32 @@ def _quantized_events(spark):
         .cast("long")
         .alias("vb"),
     )
+
+
+def _quantized_events(spark):
+    return _quantize(load_table(spark, SF, "events").select("user_id", "value"))
+
+
+# Files per append-ordered churn batch. should_recluster's statistic is
+# weighted by files, so how far three batches erode a 64-file layout
+# depends on how many files each batch writes. A plain load_table
+# round-robins events to defaultParallelism, which would make that one
+# file per core of whatever host runs the suite. 32 is the count of the
+# documented measured cycle (SCALE.md: 0.058 -> 0.269 -> 0.058, taken on
+# a 32-core local run): 64 + 3 x 32 = 160 files, reading 0.2689.
+CHURN_FILES = 32
+
+
+def _churn_batch(spark, i):
+    """Append-ordered churn batch ``i`` (one third of the quantized rows,
+    by ``crc32 % 3``) as exactly CHURN_FILES round-robin partitions. The
+    full event row is repartitioned before the select: the sort Spark
+    runs ahead of a round-robin repartition orders by the whole row, so
+    that is what fixes which rows land in which file."""
+    ev = load_table(spark, SF, "events", parallel=False).repartition(CHURN_FILES)
+    q = _quantize(ev)
+    h = F.crc32(F.concat_ws("|", "ub", "vb"))
+    return q.filter(h % 3 == i % 3)
 
 
 def _modeled(spark):
@@ -216,11 +241,12 @@ def test_recluster_trigger_degrades_with_appends_and_restores_on_compaction(
     trig0, stats0 = should_recluster(wh, "ev_z", "vb", threshold=0.2)
     assert not trig0 and stats0["mean_read_fraction"] < 0.1
 
-    # append-ordered churn: each batch dir spans the whole vb domain
-    h = F.crc32(F.concat_ws("|", "ub", "vb"))
+    # append-ordered churn: each batch is CHURN_FILES round-robin files,
+    # each spanning the whole vb domain (why the count is pinned: see
+    # CHURN_FILES)
     frac = stats0["mean_read_fraction"]
     for i in range(1, 4):
-        wh.fact_append("ev_z", q.filter(h % 3 == i % 3), f"b{i}")
+        wh.fact_append("ev_z", _churn_batch(spark, i), f"b{i}")
         _, stats_i = should_recluster(wh, "ev_z", "vb", threshold=0.2)
         assert stats_i["mean_read_fraction"] >= frac  # monotone erosion
         frac = stats_i["mean_read_fraction"]
@@ -386,9 +412,8 @@ def test_equal_count_recluster_trigger_parity(spark, tmp_path):
     assert not trig0  # fresh equal-count layout sits near 1/n_files
 
     # erode with append-ordered churn, then re-check the same contract
-    h = F.crc32(F.concat_ws("|", "ub", "vb"))
     for i in range(1, 4):
-        wh.fact_append("ev_z", q.filter(h % 3 == i % 3), f"b{i}")
+        wh.fact_append("ev_z", _churn_batch(spark, i), f"b{i}")
     n1, frac1 = model_fraction(wh._live_dirs("ev_z"))
     trig1, stats1 = should_recluster(wh, "ev_z", "vb", threshold=0.2)
     assert stats1["n_files"] == n1
