@@ -28,6 +28,7 @@ from etl__project_spark.datapipe.graph import (
 )
 from etl__project_spark.refdata import VIDEO_DATA_CTE, synth_video_data
 from etl__project_spark.session import state_checkpoint
+from etl__project_spark.sources.tables import fan_out_by_rows
 from etl__project_spark.datapipe import (  # noqa: E402
     brute_force_topk,
     bucketed_topk,
@@ -54,34 +55,16 @@ from etl__project_spark.datapipe.linalg import covariance_oracle_sql  # noqa: E4
 from etl__project_spark.plans.catalog._registry import ORACLES, QUERIES, query  # noqa: F401
 
 
-def load_table(spark, sf_dir, table, **kw):
+def load_table(spark, sf_dir, table):
     """Proxy to the package-level ``catalog.load_table`` attribute — the
     ONE patch point tests and tools monkeypatch to substitute fixtures
     (pre-split behavior: every query resolved the module global). Family
     modules bind this proxy, so patching
     ``etl__project_spark.plans.catalog.load_table`` still governs every
-    query after the family split. ``**kw`` forwards loader options
-    (e.g. ``parallel=False``) when the patched-in loader accepts them;
-    fixture substitutes that take only (spark, sf_dir, table) keep
-    working because every call site passes options it can semantically
-    drop."""
-    import inspect
-
+    query after the family split."""
     import etl__project_spark.plans.catalog as _pkg
 
-    fn = _pkg.load_table
-    if kw:
-        try:
-            params = inspect.signature(fn).parameters
-        except (TypeError, ValueError):
-            params = {}
-        kw = {
-            k: v
-            for k, v in kw.items()
-            if k in params
-            or any(p.kind is inspect.Parameter.VAR_KEYWORD for p in params.values())
-        }
-    return fn(spark, sf_dir, table, **kw)
+    return _pkg.load_table(spark, sf_dir, table)
 
 
 BROADCAST_FILE_LIMIT_ENV = "SPARK_GRAFT_BROADCAST_FILE_LIMIT"
@@ -140,8 +123,30 @@ def size_gated_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     return F.broadcast(df)
 
 
+# Events per task for the VideoStart parse; sized in ``_video``'s docstring.
+VIDEO_ROWS_PER_TASK = 25_000
+
+
 def _video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return synth_video_data(load_table(spark, sf_dir, "events"))
+    """The raw ``video_data`` rows synthesized from ``events``, fanned
+    out to ``ceil(rows / VIDEO_ROWS_PER_TASK)`` tasks (capped at the
+    core count) because every ``vs_*`` query parses each row's strings.
+
+    ``VIDEO_ROWS_PER_TASK`` is the measured crossover. ``vs_fact`` on
+    the first N rows of the sf0.1 events, one row group each, 4-core
+    local mode, median of 5 interleaved runs, 1 / 2 / 4 tasks:
+    10,000 rows 1.05 / 1.19 / 1.26 s; 25,000 rows 1.06 / 1.17 / 1.21 s;
+    50,000 rows 1.16 / 1.07 / 1.06 s; 100,000 rows 1.46 / 1.28 / 1.16 s.
+    So one task wins up to 25,000 events and the shuffle wins from
+    50,000; 25,000 is the low end of that interval, which still gives
+    sf0.1's 100,000 events four tasks. ``vs_fact_rollup`` aggregates
+    right after the parse and gained nothing from the fan-out in the
+    same runs (sf0.1: 0.50 s on one task, 0.53 s on four); it shares
+    the parse, so it shares the policy."""
+    ev = fan_out_by_rows(
+        load_table(spark, sf_dir, "events"), sf_dir, "events", VIDEO_ROWS_PER_TASK
+    )
+    return synth_video_data(ev)
 
 
 def _parsed(spark: SparkSession, sf_dir: str, keep_id: bool = False) -> DataFrame:

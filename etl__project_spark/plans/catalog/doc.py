@@ -30,6 +30,7 @@ from etl__project_spark.datapipe.graph import (
 )
 from etl__project_spark.refdata import VIDEO_DATA_CTE, synth_video_data
 from etl__project_spark.session import state_checkpoint
+from etl__project_spark.sources.tables import fan_out_by_rows
 from etl__project_spark.datapipe import (  # noqa: E402
     brute_force_topk,
     bucketed_topk,
@@ -354,6 +355,11 @@ def doc_minhash_sig(spark, sf_dir):
     return minhash_signature(sh, n_hashes=8)
 
 
+# Documents per task for doc_lsh_pairs' shingle/MinHash map stage; sized
+# in its docstring.
+SHINGLE_ROWS_PER_TASK = 250
+
+
 @query(
     "doc_lsh_pairs",
     f"""WITH sh AS (
@@ -390,12 +396,27 @@ def doc_lsh_pairs(spark, sf_dir):
     identical ``Exchange hashpartitioning(doc_id)`` under the minhash
     aggregate, so AQE's runtime stage reuse materializes the shuffle
     once and the second consumer's stages are skipped — verified in the
-    event log (one 32-task md5 map stage per run). The previous
-    persist + count guarded against the broadcast build and probe
-    racing a lazily-cached plan; with no cache there is nothing to
-    race, the count job disappears, and no executor memory is pinned."""
-    sh = char_shingles(load_table(spark, sf_dir, "documents"), distinct=False)
-    sig = minhash_signature(sh, n_hashes=8)
+    event log (one md5 map stage per run). No persist + count: with no
+    cache there is nothing for the broadcast build and probe to race,
+    no count job, and no executor memory pinned.
+
+    The shingle + md5 map stage is the query's cost, so its input is
+    fanned out to ``ceil(docs / SHINGLE_ROWS_PER_TASK)`` tasks (capped at
+    the core count). ``SHINGLE_ROWS_PER_TASK`` is the measured
+    crossover. This query on the first N sf0.1 documents, one row group
+    each, 4-core local mode, median of 5 interleaved runs, 1 / 2 / 4
+    tasks: 100 docs 0.67 / 0.68 / 0.73 s; 250 docs 0.58 / 0.54 / 0.55 s;
+    500 docs 0.75 / 0.56 / 0.52 s; 1,000 docs 1.05 / 0.77 / 0.59 s. At
+    sf0.1 (5,000 docs) one task took 4.92 s and four 1.79 s. Two tasks
+    tie one at 250 documents and win from 500, so a second task starts
+    above 250."""
+    docs = fan_out_by_rows(
+        load_table(spark, sf_dir, "documents"),
+        sf_dir,
+        "documents",
+        SHINGLE_ROWS_PER_TASK,
+    )
+    sig = minhash_signature(char_shingles(docs, distinct=False), n_hashes=8)
     return lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4)
 
 
@@ -443,10 +464,7 @@ def doc_lsh_recall_audit(spark, sf_dir):
     lossy path when the exact join is too expensive for it."""
     docs = load_table(spark, sf_dir, "documents")
     exact = jaccard_prefix_pairs(docs, threshold=0.35).select("id_a", "id_b")
-    sig = minhash_signature(
-        char_shingles(docs, distinct=False), n_hashes=8
-    ).persist()
-    sig.count()
+    sig = minhash_signature(char_shingles(docs, distinct=False), n_hashes=8)
     lsh = lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4).withColumn(
         "hit", F.lit(1)
     )
@@ -460,10 +478,34 @@ def doc_lsh_recall_audit(spark, sf_dir):
     )
 
 
+# Documents per task for doc_simhash's token md5 map stage; sized in its
+# docstring.
+SIMHASH_ROWS_PER_TASK = 1_250
+
+
 @query("doc_simhash", _simhash_oracle())
 def doc_simhash(spark, sf_dir):
-    """SimHash document signatures (16-bit, md5-bit source)."""
-    return simhash(load_table(spark, sf_dir, "documents"))
+    """SimHash document signatures (16-bit, md5-bit source).
+
+    The token md5 map stage is fanned out to
+    ``ceil(docs / SIMHASH_ROWS_PER_TASK)`` tasks (capped at the core
+    count). ``SIMHASH_ROWS_PER_TASK`` is the measured crossover. This
+    query on the first N sf0.1 documents, one row group each, 4-core
+    local mode, median of 5 interleaved runs, 1 / 2 / 4 tasks: 500 docs
+    0.50 / 0.53 / 0.60 s; 1,000 docs 0.53 / 0.53 / 0.56 s; 2,500 docs
+    0.56 / 0.51 / 0.48 s; 5,000 docs 0.69 / 0.59 / 0.55 s. One task wins
+    up to 1,000 documents and the shuffle wins from 2,500; 1,250 is the
+    low end of that interval that still gives sf0.1 four tasks. A
+    document costs about a fifth of what it costs in ``doc_lsh_pairs``
+    (one md5 per token, not per 5-character shingle), hence the larger
+    count."""
+    docs = fan_out_by_rows(
+        load_table(spark, sf_dir, "documents"),
+        sf_dir,
+        "documents",
+        SIMHASH_ROWS_PER_TASK,
+    )
+    return simhash(docs)
 
 
 @query(

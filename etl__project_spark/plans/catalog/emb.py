@@ -30,6 +30,7 @@ from etl__project_spark.datapipe.graph import (
 )
 from etl__project_spark.refdata import VIDEO_DATA_CTE, synth_video_data
 from etl__project_spark.session import state_checkpoint
+from etl__project_spark.sources.tables import fan_out_by_rows
 from etl__project_spark.datapipe import (  # noqa: E402
     brute_force_topk,
     bucketed_topk,
@@ -124,6 +125,10 @@ def emb_norms(spark, sf_dir):
     )
 
 
+# Vectors per task for emb_cosine_topk's scan; sized in its docstring.
+COSINE_ROWS_PER_TASK = 500
+
+
 @query(
     "emb_cosine_topk",
     f"""WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
@@ -133,9 +138,21 @@ SELECT vec_id, cosine FROM (
 ) ORDER BY cosine DESC, vec_id LIMIT 10""",
 )
 def emb_cosine_topk(spark, sf_dir):
-    """Brute-force exact cosine top-10 against a query vector."""
+    """Brute-force exact cosine top-10 against a query vector.
+
+    The scanned side is fanned out to
+    ``ceil(vectors / COSINE_ROWS_PER_TASK)`` tasks (capped at the core
+    count); the one-row query side is broadcast as loaded.
+    ``COSINE_ROWS_PER_TASK`` is the measured crossover. This query on
+    the first N sf0.1 embeddings, one row group each, 4-core local mode,
+    median of 5 interleaved runs, 1 / 2 / 4 tasks: 500 vectors 0.25 /
+    0.30 / 0.29 s; 1,000 vectors 0.27 / 0.25 / 0.26 s; 2,000 vectors
+    0.30 / 0.28 / 0.27 s. One task wins at 500 vectors, the counts tie at
+    1,000 and the shuffle wins at 2,000, so a second task starts above
+    500."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") == 0), k=10)
+    scan = fan_out_by_rows(emb, sf_dir, "embeddings", COSINE_ROWS_PER_TASK)
+    return brute_force_topk(scan, emb.filter(F.col("vec_id") == 0), k=10)
 
 
 @query(

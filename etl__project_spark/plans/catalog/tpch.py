@@ -177,14 +177,11 @@ LIMIT 10""",
 )
 def tpch_q3_shipping(spark, sf_dir):
     """TPC-H Q3-shaped: selective dim filter → join fact → top-k revenue.
-    customer and orders filters cut the build sides before the join.
-    Both sides are consumed ONLY as explicit broadcasts, so they load
-    ``parallel=False``: the single-row-group repartition was a pure
-    extra shuffle stage under each BroadcastExchange (guide §2.1)."""
-    c = load_table(spark, sf_dir, "customer", parallel=False).filter(
+    customer and orders filters cut the build sides before the join."""
+    c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = load_table(spark, sf_dir, "orders", parallel=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("date")
     )
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -228,12 +225,9 @@ def tpch_q5_region_volume(spark, sf_dir):
     until the final 25-group aggregate."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
-    # customer/orders are consumed ONLY as explicit broadcasts here, so
-    # they load parallel=False — the single-row-group repartition was a
-    # pure extra shuffle stage under each BroadcastExchange (guide §2.1)
-    c = load_table(spark, sf_dir, "customer", parallel=False)
+    c = load_table(spark, sf_dir, "customer")
     s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders", parallel=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("date"))
     )
@@ -475,10 +469,8 @@ def tpch_q7_nation_volume(spark, sf_dir):
     customer side); the disjunctive pair predicate runs post-join. All
     dims broadcast — lineitem never shuffles before the final group."""
     s = load_table(spark, sf_dir, "supplier")
-    # customer/orders feed ONLY explicit broadcasts (guide §2.1 — the
-    # q3/q5 fixture-repartition removal applied family-wide)
-    c = load_table(spark, sf_dir, "customer", parallel=False)
-    o = load_table(spark, sf_dir, "orders", parallel=False)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
@@ -535,8 +527,8 @@ def tpch_q8_market_share(spark, sf_dir):
     conditional aggregation (sum-CASE over sum) after a 7-table star."""
     p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     s = load_table(spark, sf_dir, "supplier")
-    c = load_table(spark, sf_dir, "customer", parallel=False)
-    o = load_table(spark, sf_dir, "orders", parallel=False)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region")
@@ -587,7 +579,7 @@ def tpch_q9_profit(spark, sf_dir):
     supply cost is a flat 10.0/unit — the join/agg shape is the point."""
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
     s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders", parallel=False)
+    o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
     li = load_table(spark, sf_dir, "lineitem")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 10.0 * F.col(
@@ -627,9 +619,9 @@ def tpch_q10_returned(spark, sf_dir):
     """TPC-H Q10-shaped: top-20 customers by returned-item revenue in a
     quarter. Ordered on the ROUNDED revenue with a key tiebreak so the
     top-k cut is deterministic across engines."""
-    c = load_table(spark, sf_dir, "customer", parallel=False)
+    c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    o = load_table(spark, sf_dir, "orders", parallel=False).filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("date"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("date"))
     )
@@ -663,7 +655,7 @@ def tpch_q12_late_lines(spark, sf_dir):
     """TPC-H Q12-shaped (no ship-mode column in the fixtures): per order
     priority, how many lines shipped more than 60 days after the order —
     cross-table date arithmetic inside a conditional aggregate."""
-    o = load_table(spark, sf_dir, "orders", parallel=False)
+    o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     late = (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
@@ -803,8 +795,8 @@ def tpch_q18_big_orders(spark, sf_dir):
     """TPC-H Q18-shaped: large-volume orders — HAVING on a grouped sum,
     then join back to orders/customer. The HAVING filter shrinks the
     aggregate output before any join."""
-    c = load_table(spark, sf_dir, "customer", parallel=False)
-    o = load_table(spark, sf_dir, "orders", parallel=False)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     q = (
         li.groupBy("l_orderkey")

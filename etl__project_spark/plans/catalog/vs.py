@@ -546,11 +546,8 @@ def vs_warehouse_load(spark, sf_dir):
         ParquetWarehouse,
         load_batch,
     )
-    from etl__project_spark.refdata import synth_video_data
-    from etl__project_spark.sources import load_table as _lt
 
-    ev = _lt(spark, sf_dir, "events")
-    raw = synth_video_data(ev)
+    raw = _video(spark, sf_dir)
     wh = ParquetWarehouse(spark, tempfile.mkdtemp(prefix="vs_wh_"))
     load_batch(raw.filter(F.col("event_id") % 10 < 5), wh, "b1", spark)
     load_batch(raw.filter(F.col("event_id") % 10 >= 5), wh, "b2", spark)

@@ -25,12 +25,12 @@ TABLES = [
 ]
 
 
-# The fixture files are single-file single-row-group parquet, so Spark's
-# scan produces ONE partition and every downstream pipeline runs on one
-# core. Round-robin repartition restores parallelism locally. At real
-# scale this is unnecessary (many files / row groups split naturally) and
-# the repartition collapses to a cheap no-op relative to the workload.
-_REPARTITION = {"lineitem", "orders", "events", "documents", "embeddings", "customer"}
+# No scan is repartitioned here. A fixture file is one parquet row group,
+# so its scan is ONE partition; at real scale a table is many files and
+# row groups, and Spark's own file split spreads the scan over the cores.
+# A shuffle in front of every scan costs a sorted exchange per query for
+# parallelism that only per-row-heavy operators can use; those call
+# ``fan_out_by_rows``, sized by the table's row count, not the core count.
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -118,15 +118,12 @@ def _schema_key(path: str) -> tuple:
     return (path, tuple(sorted(files)))
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, parallel: bool = True
-) -> DataFrame:
-    """``parallel=False`` skips the single-row-group repartition — for
-    tables consumed ONLY as explicit-broadcast build sides, where the
-    pre-broadcast work (scan + filter below the exchange) is single-task
-    either way and the round-robin shuffle is a pure extra stage before
-    the driver collects the side anyway (guide §2.1: remove shuffles
-    whose output ordering/partitioning nobody needs)."""
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name`` under ``sf_dir`` as a plain parquet scan,
+    split the way Spark splits the files (one partition per
+    single-row-group fixture file), with both timestamp vintages
+    normalized. No exchange: callers whose per-row compute wants more
+    tasks than the split gives use ``fan_out_by_rows``."""
     _ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = None
@@ -141,8 +138,6 @@ def load_table(
         df = spark.read.parquet(path)
         if key is not None:
             _SCHEMA_CACHE[path] = (key, df.schema)
-    if parallel and name in _REPARTITION:
-        df = df.repartition(spark.sparkContext.defaultParallelism)
     # Fixture vintage 1: events.ts is TIMESTAMP(NANOS) in parquet; with
     # spark.sql.legacy.parquet.nanosAsLong it surfaces as a long of epoch
     # nanos. Truncate to micros (DuckDB's native precision, so the oracle
@@ -154,6 +149,60 @@ def load_table(
     # the inferTimestampNTZ conf above was set before the read; normalize
     # unconditionally so both vintages load identically.
     return normalize_timestamps(df)
+
+
+def _footer_counts(sf_dir: str, name: str) -> tuple[int, int] | None:
+    """(rows, row groups) of table ``name`` from its parquet footers —
+    metadata only, no Spark job. None when there is no readable file
+    (a substituted fixture, a remote path)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        if os.path.isdir(path):
+            files = sorted(
+                os.path.join(parent, n)
+                for parent, _dirs, names in os.walk(path)
+                for n in names
+                if n.endswith(".parquet")
+            )
+        else:
+            files = [path]
+        metas = [pq.read_metadata(f) for f in files]
+    except (OSError, ValueError):
+        return None
+    if not metas:
+        return None
+    return sum(m.num_rows for m in metas), sum(m.num_row_groups for m in metas)
+
+
+def fan_out_by_rows(
+    df: DataFrame, sf_dir: str, name: str, rows_per_task: int
+) -> DataFrame:
+    """``df`` (a scan of table ``name``) spread over
+    ``min(defaultParallelism, ceil(rows / rows_per_task))`` tasks, for
+    operators whose per-row compute outweighs a shuffle stage.
+
+    ``rows`` comes from the parquet footers. ``df`` is returned
+    unchanged, with no exchange at all, when that count is at most 1,
+    when the scan already has at least that many row groups (Spark's file
+    split cannot cut a row group, but does spread row groups over the
+    cores), or when there is no footer to read. ``rows_per_task`` is the
+    caller's measured crossover: below it one task finishes before a
+    shuffle pays for itself."""
+    counts = _footer_counts(sf_dir, name)
+    if counts is None:
+        return df
+    rows, row_groups = counts
+    n = min(
+        df.sparkSession.sparkContext.defaultParallelism,
+        -(-rows // rows_per_task),
+    )
+    if n <= 1 or row_groups >= n:
+        return df
+    return df.repartition(n)
 
 
 def load_tables(

@@ -595,6 +595,73 @@ def read_join_view(wh: ParquetWarehouse, static_a: DataFrame) -> DataFrame:
     return wh.read("jv_view", _jv_view_schema(static_a))
 
 
+def _join_view_apply(
+    spark: SparkSession, static_a: DataFrame, warehouse_root: str, how: str
+):
+    """The per-batch ``apply`` of a CDC-maintained join view
+    ``static_a ⋈ B`` (``how="inner"``, tables ``jv_*``) or
+    ``static_a ⟕ B`` (``how="left"``, tables ``ljv_*``).
+
+    Per micro-batch: compact latest-wins per key KEEPING tombstones
+    (``_latest_per_key``); translate to signed row deltas against B's
+    CURRENT stored state (``cdc_to_signed_delta`` — old images retract,
+    post-images assert); derive the view delta; fold the view and B's
+    state through ``publish_merged`` consolidations. Publish order:
+    view → state.
+
+    The inner delta signed-joins B's delta against the static side (A
+    never re-joins B's history — two of the three delta terms vanish when
+    only B churns). The left delta adds the null-extension transitions
+    (keys crossing 0→>0 retract their placeholders, >0→0 re-assert
+    them), and the left view is SEEDED here, once (exactly-once batch id
+    "seed"), with every A row null-extended: B starts empty, so the LEFT
+    join of the initial states is exactly NE(A); a restart no-ops the
+    seed by id."""
+    from etl__project_spark.operators.ivm import (
+        _signed_join,
+        cdc_to_signed_delta,
+        leftjoin_delta_signed,
+        leftjoin_init_signed,
+    )
+
+    prefix = {"inner": "jv", "left": "ljv"}[how]
+    view, state = f"{prefix}_view", f"{prefix}_state_b"
+    wh = ParquetWarehouse(spark, warehouse_root)
+    a_signed = state_checkpoint(
+        static_a.select("*", F.lit(1).cast("long").alias("sign")),
+        table_sized=True,
+    )
+    view_schema = _jv_view_schema(static_a)
+    if how == "left":
+        empty_b = empty_frame(spark, JV_STATE_SCHEMA)
+        wh.publish_merged(
+            view,
+            leftjoin_init_signed(a_signed, empty_b, ["id"]),
+            view_schema,
+            "seed",
+            _consolidate_merge,
+        )
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        compact = _latest_per_key(batch, "id")
+        state_b = wh.read(state, JV_STATE_SCHEMA)
+        delta_b = state_checkpoint(
+            cdc_to_signed_delta(
+                state_b, compact.select("id", "op", "v"), ["id"]
+            ),
+            table_sized=False,
+        )
+        if how == "left":
+            delta_v = leftjoin_delta_signed(a_signed, state_b, delta_b, ["id"])
+        else:
+            delta_v = _signed_join(a_signed, delta_b, ["id"], "sign")
+        bid = str(batch_id)
+        wh.publish_merged(view, delta_v, view_schema, bid, _consolidate_merge)
+        wh.publish_merged(state, delta_b, JV_STATE_SCHEMA, bid, _consolidate_merge)
+
+    return _apply
+
+
 def stream_join_view_cdc(
     spark: SparkSession,
     static_a: DataFrame,
@@ -605,16 +672,8 @@ def stream_join_view_cdc(
 ):
     """Maintain the join view ``static_a ⋈ B`` while B arrives as a CDC
     changelog stream (JSON lines of ``CDC_SCHEMA``: id/seq/op/v) — the
-    streaming face of ``operators/ivm.py``'s signed-delta IVM.
-
-    Per micro-batch: (1) compact the batch latest-wins per key KEEPING
-    tombstones (``cdc_apply``); (2) translate to signed row deltas
-    against B's CURRENT stored state (``cdc_to_signed_delta`` — old
-    images retract, post-images assert); (3) signed-join the delta
-    against the static side (A never re-joins B's history — two of the
-    three delta terms vanish when only B churns); (4) fold the view and
-    B's state through ``publish_merged`` consolidations. Publish order:
-    view → state.
+    streaming face of ``operators/ivm.py``'s signed-delta IVM. The fold
+    is ``_join_view_apply(how="inner")``.
 
     The batch twin ``tpch_join_cdc_incremental`` and the property tests
     pin the algebra, this pins the production shape. Per-batch cost: one
@@ -622,33 +681,13 @@ def stream_join_view_cdc(
     A, and consolidations that touch only keys the delta touched when
     the state tables are bucketed by key.
     """
-    from etl__project_spark.operators.ivm import _signed_join, cdc_to_signed_delta
-
-    wh = ParquetWarehouse(spark, warehouse_root)
-    a_signed = state_checkpoint(
-        static_a.select("*", F.lit(1).cast("long").alias("sign")),
-        table_sized=True,
-    )
-    view_schema = _jv_view_schema(static_a)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = _latest_per_key(batch, "id")
-        state_b = wh.read("jv_state_b", JV_STATE_SCHEMA)
-        delta_b = state_checkpoint(
-            cdc_to_signed_delta(
-                state_b, compact.select("id", "op", "v"), ["id"]
-            ),
-            table_sized=False,
-        )
-        delta_v = _signed_join(a_signed, delta_b, ["id"], "sign")
-        bid = str(batch_id)
-        wh.publish_merged("jv_view", delta_v, view_schema, bid, _consolidate_merge)
-        wh.publish_merged(
-            "jv_state_b", delta_b, JV_STATE_SCHEMA, bid, _consolidate_merge
-        )
-
     return _fold_stream(
-        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
+        spark,
+        CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        _join_view_apply(spark, static_a, warehouse_root, "inner"),
+        available_now,
     )
 
 
@@ -671,57 +710,18 @@ def stream_leftjoin_view_cdc(
     ``operators/ivm.py:leftjoin_delta_signed`` (the batch twin is
     ``tpch_leftjoin_cdc_incremental``), completing the
     ``stream_join_view_cdc`` family with null-extension maintenance.
+    The fold is ``_join_view_apply(how="left")``, which seeds the view.
 
-    The view is SEEDED once (exactly-once batch id "seed") with every
-    A row null-extended — B starts empty, so the LEFT join of the
-    initial states is exactly NE(A); a restart no-ops the seed by id.
-    Per micro-batch thereafter: compact latest-wins keeping tombstones,
-    translate to signed deltas against B's stored state, and fold the
-    combined inner + null-extension-transition delta
-    (keys crossing 0→>0 retract their placeholders, >0→0 re-assert
-    them). Publish order matches the inner job: view → state. Per-batch cost adds one
-    touched-keys probe of B's state and one signed probe of A to the
-    inner job's plan — O(|Δ| × fan-out).
+    Per-batch cost adds one touched-keys probe of B's state and one
+    signed probe of A to the inner job's plan — O(|Δ| × fan-out).
     """
-    from etl__project_spark.operators.ivm import (
-        cdc_to_signed_delta,
-        leftjoin_delta_signed,
-        leftjoin_init_signed,
-    )
-
-    wh = ParquetWarehouse(spark, warehouse_root)
-    a_signed = state_checkpoint(
-        static_a.select("*", F.lit(1).cast("long").alias("sign")),
-        table_sized=True,
-    )
-    view_schema = _jv_view_schema(static_a)
-    empty_b = empty_frame(spark, JV_STATE_SCHEMA)
-    wh.publish_merged(
-        "ljv_view",
-        leftjoin_init_signed(a_signed, empty_b, ["id"]),
-        view_schema,
-        "seed",
-        _consolidate_merge,
-    )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        compact = _latest_per_key(batch, "id")
-        state_b = wh.read("ljv_state_b", JV_STATE_SCHEMA)
-        delta_b = state_checkpoint(
-            cdc_to_signed_delta(
-                state_b, compact.select("id", "op", "v"), ["id"]
-            ),
-            table_sized=False,
-        )
-        delta_v = leftjoin_delta_signed(a_signed, state_b, delta_b, ["id"])
-        bid = str(batch_id)
-        wh.publish_merged("ljv_view", delta_v, view_schema, bid, _consolidate_merge)
-        wh.publish_merged(
-            "ljv_state_b", delta_b, JV_STATE_SCHEMA, bid, _consolidate_merge
-        )
-
     return _fold_stream(
-        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
+        spark,
+        CDC_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        _join_view_apply(spark, static_a, warehouse_root, "left"),
+        available_now,
     )
 
 

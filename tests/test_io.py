@@ -4,10 +4,15 @@ pipes, non-ASCII."""
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 
-from etl__project_spark.sources import read_raw_csv, write_csv
+import pytest
+
+from etl__project_spark.sources import TABLES, read_raw_csv, write_csv
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_csv_round_trip(spark):
@@ -177,3 +182,47 @@ def test_schema_cache_reinfers_after_part_file_overwritten_in_place(spark, tmp_p
     assert df.columns == ["a", "b", "c"]
     assert [tuple(r) for r in df.collect()] == [(4, "y", 1.5)]
     assert sum(str(tdir) in repr(k) for k in _SCHEMA_CACHE) == 1
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_fixture_scan_has_no_round_robin_exchange(spark, name):
+    """A fixture scan keeps Spark's own file split. A core-count
+    round-robin in front of every scan is a sorted shuffle per query
+    that only per-row-heavy operators can use; those fan out
+    themselves, by rows (``fan_out_by_rows``)."""
+    from etl__project_spark.sources.tables import load_table
+
+    assert "RoundRobinPartitioning" not in _plan(load_table(spark, SF_DIR, name))
+
+
+def test_fan_out_by_rows_sizes_tasks_by_footer_rows(spark, tmp_path):
+    """At or below the threshold (and with no footer to read) the input
+    frame comes back as it went in, with no exchange; above it the
+    frame has ``min(defaultParallelism, ceil(rows / rows_per_task))``
+    partitions. A table whose row groups already cover that count keeps
+    its scan split."""
+    from etl__project_spark.sources.tables import fan_out_by_rows, load_table
+
+    sf = "/root/testdata/sf0.01"  # events: 10,000 rows in one row group
+    ev = load_table(spark, sf, "events")
+    rows = 10_000
+    assert ev.rdd.getNumPartitions() == 1
+    for rows_per_task in (rows, rows * 10):
+        assert fan_out_by_rows(ev, sf, "events", rows_per_task) is ev
+    assert fan_out_by_rows(ev, str(tmp_path), "events", 1) is ev
+
+    cores = spark.sparkContext.defaultParallelism
+    for rows_per_task in (rows - 1, rows // 3, 1):
+        out = fan_out_by_rows(ev, sf, "events", rows_per_task)
+        want = min(cores, math.ceil(rows / rows_per_task))
+        assert out.rdd.getNumPartitions() == want, rows_per_task
+        assert "RoundRobinPartitioning" in _plan(out)
+        assert out.count() == rows
+
+    spark.range(1000).repartition(cores).write.parquet(str(tmp_path / "t.parquet"))
+    t = load_table(spark, str(tmp_path), "t")
+    assert fan_out_by_rows(t, str(tmp_path), "t", 1) is t

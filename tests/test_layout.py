@@ -49,9 +49,8 @@ def _quantized_events(spark):
 
 # Files per append-ordered churn batch. should_recluster's statistic is
 # weighted by files, so how far three batches erode a 64-file layout
-# depends on how many files each batch writes. A plain load_table
-# round-robins events to defaultParallelism, which would make that one
-# file per core of whatever host runs the suite. 32 is the count of the
+# depends on how many files each batch writes; the count is pinned here
+# rather than left to the scan's split. 32 is the count of the
 # documented measured cycle (SCALE.md: 0.058 -> 0.269 -> 0.058, taken on
 # a 32-core local run): 64 + 3 x 32 = 160 files, reading 0.2689.
 CHURN_FILES = 32
@@ -63,7 +62,7 @@ def _churn_batch(spark, i):
     full event row is repartitioned before the select: the sort Spark
     runs ahead of a round-robin repartition orders by the whole row, so
     that is what fixes which rows land in which file."""
-    ev = load_table(spark, SF, "events", parallel=False).repartition(CHURN_FILES)
+    ev = load_table(spark, SF, "events").repartition(CHURN_FILES)
     q = _quantize(ev)
     h = F.crc32(F.concat_ws("|", "ub", "vb"))
     return q.filter(h % 3 == i % 3)

@@ -429,32 +429,32 @@ EXCHANGE_BUDGET = {
     # components → decontaminate → mix/pack): 15 SMJs are
     # corpus×corpus joins over shrinking intermediates (adjudicated in
     # PLANS.md); near-flat at 100× because each stage shrinks the next.
-    "doc_pipeline_e2e": (50, 15),
+    "doc_pipeline_e2e": (25, 15),  # was 50: its 25 fixture round-robin exchanges (one per documents scan) are gone
     # collapse-first canonical dedup: shingle/sign/band on distinct
     # texts only; candidates via band equi-join (BHJ at fixture scale)
-    "doc_dedup_canonical": (3, 0),
-    "doc_dup_components": (3, 0),
+    "doc_dedup_canonical": (1, 0),  # was 3: its 2 fixture round-robin exchanges are gone
+    "doc_dup_components": (1, 0),  # was 3: its 2 fixture round-robin exchanges are gone
     # PQ train(2 Lloyd rounds)+encode+ADC: codebooks stay broadcast;
     # the shuffles are the bounded codebook-update aggregates + top-k
-    "emb_pq_topk": (4, 0),
+    "emb_pq_topk": (2, 0),  # was 4: its 2 fixture round-robin exchanges are gone
     # signed-delta IVM fold: B-state and view DELTAS are checkpointed,
     # but the accumulated view is a LAZY union (materializing it per
     # batch OOMed the 100x sweep — SCALE.md 9g), so the final plan
     # carries the initial A-join's own exchanges into the consolidation:
-    # 4 shuffles, still zero SMJs (state probes stay broadcast).
-    "tpch_join_cdc_incremental": (4, 0),
+    # 2 shuffles, still zero SMJs (state probes stay broadcast).
+    "tpch_join_cdc_incremental": (2, 0),  # was 4: its 2 fixture round-robin exchanges are gone
     # left-outer IVM fold: the inner path's exchanges plus the
     # null-extension machinery (touched-key distinct + old-count probe
     # aggregate per batch) — all keyed on the join key and O(|Δ|)-sized;
     # the initial NE is an anti-join of A against B's broadcast key set
     # (no A-keyed shuffle) and both transition directions share ONE
     # signed A-probe per batch; state probes stay broadcast (zero SMJs).
-    "tpch_leftjoin_cdc_incremental": (7, 0),
+    "tpch_leftjoin_cdc_incremental": (3, 0),  # was 7: its 4 fixture round-robin exchanges are gone
     # partially-incremental min/max: three base aggregates (existing
     # state, signed delta partial, touched-group re-derivation from
     # post state) + the linear merge + two broadcast-probed rollup
     # joins; every aggregate keys on the bounded event_type space.
-    "ev_rollup_cdc_minmax": (11, 0),
+    "ev_rollup_cdc_minmax": (4, 0),  # was 11: its 7 fixture round-robin exchanges are gone
     # multi-version SCD2 in one pass: the exchanges are the BATCH's
     # user-keyed window stages re-derived across the four union
     # branches (history/untouched/expired/new) — all delta-sized;
@@ -463,11 +463,11 @@ EXCHANGE_BUDGET = {
     # pinned checkpoint (r7 AQE-re-evaluation fix), so it never shows in
     # the visible plan; the r11 size-adaptive path dropped its offsets
     # broadcast-join exchange too (10 → 9 — one fewer stage, same rows).
-    "ev_scd2_multiversion": (9, 0),
+    "ev_scd2_multiversion": (5, 0),  # was 9: its 4 fixture round-robin exchanges are gone
     # retractable distinct count: two (group,value)-keyed hash
     # aggregates (base partial + churn partial), the merge, and the
     # group-keyed finalize; no joins at all.
-    "ev_rollup_cdc_distinct": (6, 0),
+    "ev_rollup_cdc_distinct": (3, 0),  # was 6: its 3 fixture round-robin exchanges are gone
     # full-outer IVM: the left-join fold's exchanges plus B-side
     # null-extension anti-joins against A's key set, which is derived
     # and checkpointed ONCE (the r7 OOM fix). Since the r9
@@ -478,10 +478,10 @@ EXCHANGE_BUDGET = {
     # broadcasting it at 100 TB was exactly the executor-memory blind
     # spot; AQE still converts back to broadcast at runtime when the
     # key set is actually small.
-    "tpch_fulljoin_cdc_incremental": (10, 1),
+    "tpch_fulljoin_cdc_incremental": (5, 1),  # was 10: its 5 fixture round-robin exchanges are gone
     # sign-linear second moments: two bounded-keyspace signed hash
     # aggregates + the merge, exactly the linear path's shape.
-    "ev_rollup_cdc_variance": (5, 0),
+    "ev_rollup_cdc_variance": (2, 0),  # was 5: its 3 fixture round-robin exchanges are gone
     # aggregate-over-join IVM: the final read is the checkpointed
     # 5-row aggregate state — ZERO shuffles by construction, the
     # whole point of composing the signed join delta into the rollup
@@ -489,18 +489,18 @@ EXCHANGE_BUDGET = {
     "tpch_agg_over_join_cdc": (0, 0),
     # top-k under retraction: the distinct path's (group,value)-keyed
     # aggregates + one group-keyed read-time window over live state.
-    "ev_rollup_cdc_topk": (6, 0),
+    "ev_rollup_cdc_topk": (3, 0),  # was 6: its 3 fixture round-robin exchanges are gone
     # aggregate over LEFT join, composed: like the inner twin, the
     # final read is the checkpointed bounded aggregate — zero shuffles.
     "tpch_agg_over_leftjoin_cdc": (0, 0),
     # median under retraction: the distinct-grain aggregates + one
     # group-keyed cumulative window over the live value domain.
-    "ev_rollup_cdc_median": (6, 0),
+    "ev_rollup_cdc_median": (3, 0),  # was 6: its 3 fixture round-robin exchanges are gone
     # embedding-intake composition (gate → SemDeDup → coreset →
     # scorecard): gate/kept stages are localCheckpointed so the final
     # plan is the exemplar window + four stage-count aggregates; the
     # cluster pair join stays an equi-join behind the checkpoint.
-    "emb_pipeline_e2e": (6, 0),
+    "emb_pipeline_e2e": (5, 0),  # was 6: its 1 fixture round-robin exchange is gone
     # incremental sessionization: the counts state is checkpointed per
     # batch, so the final read is ZERO shuffles — all neighborhood
     # probes and lag windows run inside the fold behind checkpoints.
@@ -511,7 +511,7 @@ EXCHANGE_BUDGET = {
     # the accumulated view stays a lazy union (SCALE.md §9g), so the
     # final consolidation carries them; zero SMJs — every state probe
     # is a broadcast of a delta-derived frame.
-    "tpch_fulljoin_cdc_bothsides": (10, 0),
+    "tpch_fulljoin_cdc_bothsides": (4, 0),  # was 10: its 6 fixture round-robin exchanges are gone
     # as-of IVM: the maintained view is checkpointed per batch, so the
     # final read is ZERO shuffles — the window computations and
     # key-splices all run inside the fold behind checkpoints.
@@ -537,10 +537,10 @@ EXCHANGE_BUDGET = {
     # incremental canonicalization: labels are stats-barriered leaves
     # per batch, so the final read is a bare scan.
     "doc_components_cdc": (0, 0),
-    # IVF read over maintained cells: the query-ranking window (5 rows),
-    # the probe-join distinct, and the per-query top-k window; centroids
-    # and probes broadcast, cells state is a checkpoint leaf.
-    "emb_ivf_cdc": (3, 0),
+    # IVF read over maintained cells: the query-ranking window (5 rows)
+    # and the per-query top-k window; centroids and probes broadcast,
+    # cells state is a checkpoint leaf.
+    "emb_ivf_cdc": (2, 0),  # was 3: its 1 fixture round-robin exchange is gone
     # funnel under CDC: the 1-row counters frame is checkpointed per
     # batch, so the final read is the 4-row stack — zero shuffles.
     "ev_funnel_cdc": (0, 0),
