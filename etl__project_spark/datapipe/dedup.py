@@ -744,8 +744,7 @@ def canonical_components(
         char_shingles(rep_docs, k=shingle_k, distinct=False),
         n_hashes=n_hashes,
         id_col=id_col,
-    ).persist()
-    sig.count()
+    )
     pairs = lsh_candidate_pairs(
         sig, n_bands=n_bands, rows_per_band=rows_per_band, id_col=id_col
     )

@@ -811,6 +811,35 @@ def assign_cells(
     )
 
 
+def ivf_cells_delta(
+    cells: DataFrame,
+    batch: DataFrame,
+    seeds: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    op_col: str = "op",
+    delete_op: str = "D",
+) -> DataFrame:
+    """Signed IVF posting delta for one CDC batch against the PRE-batch
+    signed ``cells``: retract every touched id's stored postings (one id
+    probe), assert the batch's post-images at their nearest frozen
+    centroid (:func:`assign_cells` against broadcast ``seeds``).
+    Unchanged vectors are never re-scored. Rows are (cand_id, cand_vec,
+    centroid_id, sign)."""
+    touched = batch.select(F.col(id_col).alias("cand_id")).distinct()
+    retract = cells.join(touched, ["cand_id"]).select(
+        "cand_id", "cand_vec", "centroid_id", (-F.col("sign")).alias("sign")
+    )
+    post_imgs = batch.filter(F.col(op_col) != delete_op).select(id_col, vec_col)
+    assert_c = assign_cells(post_imgs, seeds, vec_col, id_col).select(
+        "cand_id",
+        "cand_vec",
+        F.col("centroid_id").cast("long"),
+        F.lit(1).cast("long").alias("sign"),
+    )
+    return retract.unionByName(assert_c)
+
+
 def maintain_ivf_cells_cdc(
     initial: DataFrame,
     cdc_batches: list[DataFrame],
@@ -828,11 +857,12 @@ def maintain_ivf_cells_cdc(
     behaves between periodic retrains: the quantizer is a trained
     artifact, the posting lists are live state.
 
-    Per batch: one id-probe of the cell state retracts touched
-    vectors' postings; ONLY the batch's post-images score against the
-    broadcast centroids (a KB-sized crossJoin regardless of corpus
-    size); both states consolidate signed. Unchanged vectors are never
-    re-scored — the assignment step that dominates a full rebuild.
+    Per batch (:func:`ivf_cells_delta`): one id-probe of the cell
+    state retracts touched vectors' postings; ONLY the batch's
+    post-images score against the broadcast centroids (a KB-sized
+    crossJoin regardless of corpus size); both states consolidate
+    signed. Unchanged vectors are never re-scored — the assignment step
+    that dominates a full rebuild.
 
     Returns ``(emb_state, cells)``, both signed/consolidated; serve
     top-k by probing ``cells`` exactly as :func:`ivf_topk` does
@@ -895,18 +925,10 @@ def maintain_ivf_cells_cdc(
             state, batch.select(id_col, vec_col, op_col),
             [id_col], op_col=op_col, delete_op=delete_op,
         )
-        touched = batch.select(F.col(id_col).alias("cand_id")).distinct()
-        retract = cells.join(touched, ["cand_id"]).select(
-            "cand_id", "cand_vec", "centroid_id", (-F.col("sign")).alias("sign")
-        )
-        post_imgs = batch.filter(F.col(op_col) != delete_op).select(
-            id_col, vec_col
-        )
-        assert_c = assign_cells(post_imgs, seeds, vec_col, id_col).select(
-            "*", sign1
-        )
         cells = consolidate(
-            cells.unionByName(retract).unionByName(assert_c)
+            cells.unionByName(
+                ivf_cells_delta(cells, batch, seeds, vec_col, id_col, op_col, delete_op)
+            )
         )
         state = consolidate(state.unionByName(delta))
         state, cells = _ckpt_pair(state, cells)

@@ -289,10 +289,11 @@ def _ne_project(
     )
 
 
-def _b_payload_fields(state_b: DataFrame, on: list[str], sign_col: str = "sign"):
+def _payload_fields(state: DataFrame, on: list[str], sign_col: str = "sign"):
+    """A signed state's fields other than the join keys and the sign."""
     return [
         f
-        for f in state_b.schema.fields
+        for f in state.schema.fields
         if f.name not in on and f.name != sign_col
     ]
 
@@ -307,7 +308,7 @@ def leftjoin_init_signed(
     broadcasts, so this is one pass over A with no A-sized shuffle)."""
     unmatched = state_a.join(state_b.select(*on).distinct(), on, "left_anti")
     return _signed_join(state_a, state_b, on, sign_col).unionByName(
-        _ne_project(unmatched, state_a.columns, _b_payload_fields(state_b, on))
+        _ne_project(unmatched, state_a.columns, _payload_fields(state_b, on))
     )
 
 
@@ -373,7 +374,7 @@ def leftjoin_delta_signed(
         .drop("__ne_mult")
     )
     return inner_delta.unionByName(
-        _ne_project(ne_delta, state_a.columns, _b_payload_fields(state_b, on))
+        _ne_project(ne_delta, state_a.columns, _payload_fields(state_b, on))
     )
 
 
@@ -391,14 +392,6 @@ def _ne_project_b(
         *b_cols,
         F.col(sign_col),
     )
-
-
-def _a_payload_fields(state_a: DataFrame, on: list[str], sign_col: str = "sign"):
-    return [
-        f
-        for f in state_a.schema.fields
-        if f.name not in on and f.name != sign_col
-    ]
 
 
 def fulljoin_delta_signed(
@@ -427,7 +420,7 @@ def fulljoin_delta_signed(
     ne_b = _ne_project_b(
         delta_b.join(a_keys, on, "left_anti"),
         on,
-        _a_payload_fields(state_a, on, sign_col),
+        _payload_fields(state_a, on, sign_col),
         sign_col,
     )
     return left.unionByName(ne_b.select(left.columns))
@@ -448,7 +441,7 @@ def fulljoin_init_signed(
     ne_b = _ne_project_b(
         state_b.join(a_keys, on, "left_anti"),
         on,
-        _a_payload_fields(state_a, on, sign_col),
+        _payload_fields(state_a, on, sign_col),
         sign_col,
     )
     return left.unionByName(ne_b.select(left.columns))
@@ -604,8 +597,8 @@ def fulljoin_delta_signed_bothsides(
     B_old ⊗ Δw retracts the old null-extended B row even though the
     B-side's own delta lands matched (w_new = 0).
     """
-    b_fields = _b_payload_fields(state_b, on, sign_col)
-    a_fields = _a_payload_fields(state_a, on, sign_col)
+    b_fields = _payload_fields(state_b, on, sign_col)
+    a_fields = _payload_fields(state_a, on, sign_col)
     inner = delta_join_signed(state_a, state_b, delta_a, delta_b, on, sign_col)
 
     # Δ(NE_A) term 1: ΔA rows whose key has zero POST-batch B matches.

@@ -284,48 +284,33 @@ def _dir_zone_maps_cached(d: str, column: str) -> list[tuple[str, object, object
     return zones
 
 
-def prune_files_for_range(
-    paths: str | list[str], column: str, lo, hi
-) -> tuple[list[str], list[str]]:
-    """Split the parquet leaf files under ``paths`` into (must_read,
-    skipped) for ``column BETWEEN lo AND hi`` using footer zone maps —
-    the READ-side half of the Z-order layout (VERDICT r10 #2): where
-    ``files_read_under_range`` only SCORES what a pruning reader would
-    skip, this returns the pruned file listing itself, for
-    ``plans/star_load.py:read_fact_range`` to hand Spark only the
-    survivors. A file with no min/max statistics for ``column`` is
-    always read (advisory pruning — false positives cost a read that
-    the pushed-down predicate then empties; false negatives are
-    impossible by construction, the same contract as the bloom
-    sidecars). Zone maps come from the per-directory sidecar cache
-    (:func:`_dir_zone_maps_cached`) — first touch reads each file's KB
-    footer once, every later range read costs one JSON per directory."""
-    if isinstance(paths, str):
-        paths = [paths]
-    must_read: list[str] = []
-    skipped: list[str] = []
-    for p in paths:
-        for fp, mn, mx in _dir_zone_maps_cached(p, column):
-            if mn is None or (mx >= lo and mn <= hi):
-                must_read.append(fp)
-            else:
-                skipped.append(fp)
-    return must_read, skipped
-
-
 def prune_files_for_rect(
     paths: str | list[str], ranges: dict[str, tuple]
 ) -> tuple[list[str], list[str]]:
-    """Multi-column file pruning — the conjunction of
-    :func:`prune_files_for_range` over several ``column: (lo, hi)``
-    predicates: a file is skipped when ANY column's zone provably
-    misses its range (a conjunctive predicate fails if one conjunct
-    fails), read otherwise. This is where the Z-order layout pays
-    twice: every file is a bounded rectangle in ALL interleaved
-    dimensions, so a 2-dim rectangle predicate multiplies the skips
-    where a single-column sort gives pruning on one axis only. Same
-    advisory contract per column (missing stats → that conjunct can't
-    exclude); same per-directory sidecar cache, one JSON per column."""
+    """Split the parquet leaf files under ``paths`` into (must_read,
+    skipped) for the conjunction of ``column BETWEEN lo AND hi`` over
+    every ``column: (lo, hi)`` in ``ranges``, using footer zone maps —
+    the READ-side half of the Z-order layout (VERDICT r10 #2): where
+    ``files_read_under_range`` only SCORES what a pruning reader would
+    skip, this returns the pruned file listing itself, for the pruned
+    reads of ``plans/star_load.py`` (one column for
+    ``read_fact_range`` / ``read_range``, several for
+    ``read_fact_rect``) to hand Spark only the survivors.
+
+    A file is skipped when ANY column's zone provably misses its range
+    (a conjunctive predicate fails if one conjunct fails), read
+    otherwise. This is where the Z-order layout pays twice: every file
+    is a bounded rectangle in ALL interleaved dimensions, so a 2-dim
+    rectangle predicate multiplies the skips where a single-column sort
+    gives pruning on one axis only. A file with no min/max statistics
+    for a column is never excluded by that conjunct (advisory pruning —
+    false positives cost a read that the pushed-down predicate then
+    empties; false negatives are impossible by construction, the same
+    contract as the bloom sidecars). Zone maps come from the
+    per-directory sidecar cache (:func:`_dir_zone_maps_cached`) — first
+    touch reads each file's KB footer once, every later read costs one
+    JSON per directory and column. An empty ``ranges`` names no files
+    and so keeps none."""
     if isinstance(paths, str):
         paths = [paths]
     must_read: list[str] = []

@@ -23,54 +23,8 @@ from __future__ import annotations
 
 from etl__project_spark.plans.catalog._registry import ORACLES, QUERIES, query  # noqa: F401
 from etl__project_spark.plans.catalog._shared import *  # noqa: F401,F403
-from etl__project_spark.plans.catalog._shared import (  # noqa: F401
-    _video,
-    _parsed,
-    _int,
-    _money_sum_raw,
-    _money_sum,
-    _quant4,
-    _msum_raw,
-    _msum,
-    _q4,
-    _vs_fact_dims,
-    _SHINGLE_LIST,
-    _LSH_SQL_SIG,
-    _simhash_oracle,
-    _COS,
-    _BUCKET,
-    _PAIR_COS,
-    _IVF_COS_ES,
-    _IVF_COS_QX,
-    _EVENT_TYPES,
-    _SHINGLE13,
-    _SIG_CTE,
-    _BPE_MERGE_STEP,
-    _BPE_COUNTS,
-    _funnel_counts,
-    _pq_ctes,
-    _pq_sql,
-    _zexpr,
-    _kmeans_ctes,
-    _kmeans_iter_sql,
-    _simhash_pairs_oracle,
-    _GOPHER_KEEP,
-    _pipeline_e2e_sql,
-    _znorm_scores,
-    _containment_sql,
-    _SHINGLE5,
-    _containment_reps_sql,
-    _simhash_wide_pairs_oracle,
-    _bm25_micro,
-    _ewma_sql,
-    _HALF_SIG,
-    _bot_screen,
-    _WORD_GRAPH_SQL,
-    _textrank_iter_sql,
-    _kcore_iter_sql,
-    _ppr_iter_sql,
-    _event_edge_liveness,
-)
+# the two private helpers tests import through the package
+from etl__project_spark.plans.catalog._shared import _parsed, _zexpr  # noqa: F401
 from etl__project_spark.sources import load_table  # noqa: F401
 
 # Registration order: family modules execute their @query decorators on

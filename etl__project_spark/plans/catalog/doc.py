@@ -980,8 +980,7 @@ def doc_minhash_est(spark, sf_dir):
     from etl__project_spark.datapipe.dedup import minhash_jaccard_estimate
 
     docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signature(char_shingles(docs, distinct=False), n_hashes=8).persist()
-    sig.count()  # materialize: consumed by the band self-join AND two scoring joins
+    sig = minhash_signature(char_shingles(docs, distinct=False), n_hashes=8)
     pairs = lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4)
     return minhash_jaccard_estimate(sig, pairs, n_hashes=8)
 
@@ -1828,8 +1827,7 @@ def doc_containment_pairs(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     sh = char_shingles(docs, distinct=False)
-    sig = minhash_signature(sh, n_hashes=8).persist()
-    sig.count()
+    sig = minhash_signature(sh, n_hashes=8)
     cand = lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4)
     shing = char_shingles(docs, distinct=True).select(
         "doc_id", F.col("shingle")
@@ -1881,8 +1879,7 @@ def doc_containment_reps(spark, sf_dir):
     reps = docs.groupBy("text").agg(F.min("doc_id").cast("long").alias("doc_id"))
     reps = reps.select("doc_id", "text")
     sh = char_shingles(reps, distinct=False)
-    sig = minhash_signature(sh, n_hashes=8).persist()
-    sig.count()
+    sig = minhash_signature(sh, n_hashes=8)
     cand = lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4)
     shing = char_shingles(reps, distinct=True).select("doc_id", "shingle")
     sizes = shing.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -3522,10 +3519,7 @@ def doc_split_leakage_audit(spark, sf_dir):
         .otherwise(F.lit("test"))
         .alias("split"),
     )
-    sig = minhash_signature(
-        char_shingles(docs, distinct=False), n_hashes=8
-    ).persist()
-    sig.count()
+    sig = minhash_signature(char_shingles(docs, distinct=False), n_hashes=8)
     pairs = lsh_candidate_pairs(sig, n_bands=2, rows_per_band=4)
     sa = split.select(F.col("doc_id").alias("id_a"), F.col("split").alias("s_a"))
     sb = split.select(F.col("doc_id").alias("id_b"), F.col("split").alias("s_b"))

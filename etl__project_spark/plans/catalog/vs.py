@@ -389,7 +389,7 @@ def vs_scd2_upsert(spark, sf_dir):
     """SCD Type-2 upsert (summary.pdf p.8 design, SURVEY.md §2.9): two
     half-batches where the per-minute max(platform) attribute may change —
     changed keys expire the old version and insert a new current one."""
-    parsed = _parsed(spark, sf_dir, keep_id=True).persist()
+    parsed = _parsed(spark, sf_dir, keep_id=True)
     initial = (
         parsed.filter(F.col("event_id") % 10 < 5)
         .groupBy("datetime")
@@ -595,8 +595,7 @@ def vs_fact_late_dims(spark, sf_dir):
         repair_unknown_facts,
     )
 
-    parsed = _parsed(spark, sf_dir).persist()
-    parsed.count()
+    parsed = _parsed(spark, sf_dir)
     # dim at fact-load time: iPad missing
     early = with_dense_ids(
         derive_dim(parsed.filter(F.col("platform") != "iPad"), "platform"),

@@ -28,8 +28,9 @@ import json
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,7 +38,7 @@ from etl__project_spark.operators import (
     build_fact,
     parse_raw,
 )
-from etl__project_spark.operators.layout import prune_files_for_range
+from etl__project_spark.operators.layout import prune_files_for_rect
 from etl__project_spark.session import empty_frame, state_checkpoint
 
 # Output file sizing for fact appends (guide §6): per-row estimate for
@@ -117,6 +118,16 @@ def _link_or_copy(src: str, dst: str) -> None:
         shutil.copy2(src, dst)
 
 
+def _sidecar_cols(names: set[str], prefix: str) -> list[str]:
+    """The columns that ``<prefix><column>.json`` sidecars among the file
+    ``names`` describe, sorted."""
+    return sorted(
+        n[len(prefix) : -len(".json")]
+        for n in names
+        if n.startswith(prefix) and n.endswith(".json")
+    )
+
+
 class ParquetWarehouse:
     """Parquet tables under a root directory.
 
@@ -188,7 +199,8 @@ class ParquetWarehouse:
         return df.drop(ZBUCKET_COL) if ZBUCKET_COL in df.columns else df
 
     def _read_paths(self, paths: list[str], schema: T.StructType) -> DataFrame:
-        """Read parquet directories as ``schema`` (no inference job).
+        """Read parquet directories, or the data files a pruner kept, as
+        ``schema`` (no inference job); files always read in one scan.
         Directory-partitioned (equal-width Z-order) and flat dirs can
         coexist: when any dir is partitioned the read goes per-directory
         and unions — Spark's one-shot multi-path partition discovery
@@ -430,12 +442,14 @@ class ParquetWarehouse:
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self._tdir(table), "MANIFEST")
 
-    def _manifest(self, table: str) -> dict | None:
+    def _manifest(self, table: str) -> dict:
+        """The fact's MANIFEST; before the first rewrite commit, the empty
+        one (no compacted dirs, nothing absorbed, rewrite counter 0)."""
         try:
             with open(self._manifest_path(table)) as fh:
                 return json.load(fh)
         except FileNotFoundError:
-            return None
+            return {"dirs": [], "absorbed": [], "n": 0}
 
     def _live_batch_dirs(self, table: str) -> list[str]:
         base = self._tdir(table)
@@ -447,8 +461,7 @@ class ParquetWarehouse:
         # resurrect an absorbed batch's rows (the manifest, not the
         # directory listing, is the source of truth once an id appears
         # in it).
-        m = self._manifest(table)
-        absorbed = set() if m is None else set(m["absorbed"])
+        absorbed = set(self._manifest(table)["absorbed"])
         return [
             os.path.join(base, d)
             for d in os.listdir(base)
@@ -458,8 +471,7 @@ class ParquetWarehouse:
         ]
 
     def _live_dirs(self, table: str) -> list[str]:
-        m = self._manifest(table)
-        dirs = [] if m is None else [os.path.join(self._tdir(table), d) for d in m["dirs"]]
+        dirs = [os.path.join(self._tdir(table), d) for d in self._manifest(table)["dirs"]]
         # batch dirs appended after the last compaction are live too
         return sorted(set(dirs) | set(self._live_batch_dirs(table)))
 
@@ -475,8 +487,7 @@ class ParquetWarehouse:
         path = self.fact_batch_dir(table, batch_id)
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             return False
-        m = self._manifest(table)
-        if m is not None and batch_id in m["absorbed"]:
+        if batch_id in self._manifest(table)["absorbed"]:
             return False
         self._layout_write(df, layout, path)
         return True
@@ -495,7 +506,7 @@ class ParquetWarehouse:
         instead (raised as ValueError).
         """
         old = self.fact_batch_dir(table, batch_id)
-        m = self._manifest(table) or {"dirs": [], "absorbed": [], "n": 0}
+        m = self._manifest(table)
         if batch_id in m["absorbed"]:
             raise ValueError(
                 f"batch {batch_id!r} of {table!r} was absorbed by a prior "
@@ -576,7 +587,7 @@ class ParquetWarehouse:
         (0 = nothing to do).
         """
         batch_dirs = self._live_batch_dirs(table)
-        m = self._manifest(table) or {"dirs": [], "absorbed": [], "n": 0}
+        m = self._manifest(table)
         old_compacts = [os.path.join(self._tdir(table), d) for d in m["dirs"]]
         sources = sorted(set(batch_dirs) | set(old_compacts))
         if len(sources) < 2:
@@ -612,8 +623,9 @@ class ParquetWarehouse:
                 self._layout_write(merged, layout, tmp)
             else:
                 merged.coalesce(num_files).write.mode("overwrite").parquet(tmp)
-            self._compact_sidecars(sources, tmp)
-            self._compact_zone_maps(sources, tmp)
+            names = {f for d in sources for f in os.listdir(d)}
+            self._compact_sidecars(sources, tmp, _sidecar_cols(names, "_BLOOM_"))
+            self._compact_zone_maps(tmp, _sidecar_cols(names, "_ZONEMAP_"))
 
         self._rewrite_fact(
             table, m, ("compacting", "compact"), write, keep=[],
@@ -623,48 +635,41 @@ class ParquetWarehouse:
         return len(sources)
 
     @staticmethod
-    def _compact_zone_maps(sources: list[str], tmp: str) -> None:
+    def _compact_zone_maps(tmp: str, cols: list[str]) -> None:
         """Re-derive zone-map sidecars for a compaction output INSIDE
-        the same commit: any column some source kept a ``_ZONEMAP_``
-        sidecar for gets one on the compacted directory too, computed
-        from the new files' footers BEFORE the atomic rename — so the
-        range-read path never pays a first-touch footer scan over a
-        fresh compaction, and the cache commits atomically with the
-        data it describes (the same discipline as the bloom sidecars).
-        Cost: one KB footer read per output file, once per compaction."""
+        the same commit: each of ``cols`` (the columns some source kept a
+        ``_ZONEMAP_`` sidecar for) gets one on the compacted directory
+        too, computed from the new files' footers BEFORE the atomic
+        rename — so the range-read path never pays a first-touch footer
+        scan over a fresh compaction, and the cache commits atomically
+        with the data it describes (the same discipline as the bloom
+        sidecars). Cost: one KB footer read per output file, once per
+        compaction."""
         from etl__project_spark.operators.layout import _dir_zone_maps_cached
 
-        cols: set[str] = set()
-        for d in sources:
-            for f in os.listdir(d):
-                if f.startswith("_ZONEMAP_") and f.endswith(".json"):
-                    cols.add(f[len("_ZONEMAP_") : -len(".json")])
-        for col in sorted(cols):
+        for col in cols:
             _dir_zone_maps_cached(tmp, col)
 
-    def _compact_sidecars(self, sources: list[str], tmp: str) -> None:
+    def _compact_sidecars(
+        self, sources: list[str], tmp: str, key_cols: list[str]
+    ) -> None:
         """Rebuild bloom data-skipping sidecars for a compaction output
         INSIDE the same commit (VERDICT r6 #6 — compaction previously
         produced always-read directories, eroding skipping over time).
         Written into the ``compacting-*`` dir before the rename, so the
         index commits atomically with the data it describes.
 
-        For each key any source is indexed on: when EVERY source carries
-        a sidecar for it (same bit-width/k), the compacted sidecar is
-        the pure metadata UNION of their bit sets — bits(A ∪ B) =
-        bits(A) ∪ bits(B), no data rescan, the O(1) path a 100 TB
-        compaction needs. When only some sources are indexed, a union
-        would miss the unindexed dirs' keys (false negatives — the one
-        thing the index must never do), so the bits are recomputed from
-        the compacted data with the same bounded distinct used by
-        ``index_fact_batch``.
+        For each of ``key_cols`` (the keys some source is indexed on):
+        when EVERY source carries a sidecar for it (same bit-width/k),
+        the compacted sidecar is the pure metadata UNION of their bit
+        sets — bits(A ∪ B) = bits(A) ∪ bits(B), no data rescan, the O(1)
+        path a 100 TB compaction needs. When only some sources are
+        indexed, a union would miss the unindexed dirs' keys (false
+        negatives — the one thing the index must never do), so the bits
+        are recomputed from the compacted data with the same bounded
+        distinct used by ``index_fact_batch``.
         """
-        key_cols: set[str] = set()
-        for d in sources:
-            for f in os.listdir(d):
-                if f.startswith("_BLOOM_") and f.endswith(".json"):
-                    key_cols.add(f[len("_BLOOM_") : -len(".json")])
-        for key in sorted(key_cols):
+        for key in key_cols:
             metas = []
             for d in sources:
                 p = os.path.join(d, f"_BLOOM_{key}.json")
@@ -709,18 +714,8 @@ def read_range(
     of the CURRENT snapshot with ``column BETWEEN lo AND hi``, reading
     only the files whose footer rectangle intersects the range."""
     v = wh._current(table)
-    if v is None:
-        return empty_frame(wh.spark, schema)
-    vdir = os.path.join(wh._tdir(table), f"v{v}")
-    files, _skipped = prune_files_for_range([vdir], column, lo, hi)
-    if not files:
-        return empty_frame(wh.spark, schema)
-    return (
-        ParquetWarehouse._strip_layout_cols(
-            wh.spark.read.schema(schema).parquet(*files)
-        )
-        .filter(F.col(column).between(F.lit(lo), F.lit(hi)))
-    )
+    vdirs = [] if v is None else [os.path.join(wh._tdir(table), f"v{v}")]
+    return _read_rect(wh, vdirs, schema, {column: (lo, hi)})
 
 
 def check_manifest(paths: list[str]) -> list[str]:
@@ -1123,8 +1118,7 @@ def gc_fact(wh: ParquetWarehouse, table: str) -> list[str]:
     if not os.path.isdir(tdir):
         return []
     m = wh._manifest(table)
-    absorbed = set() if m is None else set(m["absorbed"])
-    referenced = set() if m is None else set(m["dirs"])
+    absorbed, referenced = set(m["absorbed"]), set(m["dirs"])
     removed: list[str] = []
     for d in sorted(os.listdir(tdir)):
         full = os.path.join(tdir, d)
@@ -1168,15 +1162,10 @@ def vacuum(wh: ParquetWarehouse, table: str, keep_last: int = 2) -> list[int]:
         return []
     keep = max(1, keep_last)
     removable = [v for v in wh.versions(table) if v <= current][:-keep]
-    removed: list[int] = []
     for v in removable:
-        shutil.rmtree(os.path.join(wh._tdir(table), f"v{v}"), ignore_errors=True)
-        try:
-            os.remove(os.path.join(wh._tdir(table), f"v{v}.meta"))
-        except FileNotFoundError:
-            pass
-        removed.append(v)
-    return removed
+        path = os.path.join(wh._tdir(table), f"v{v}")
+        wh._discard(path, f"{path}.meta")
+    return removable
 
 
 # --- per-batch bloom indexes: point-lookup data skipping ---------------------
@@ -1291,6 +1280,37 @@ def prune_dirs_for_key(
     return must_read, skipped
 
 
+def _read_pruned(
+    wh: ParquetWarehouse, kept: list[str], schema: T.StructType, cond: Column
+) -> DataFrame:
+    """The one body of the pruned reads: read the files or directories a
+    pruner ``kept`` as ``schema`` through :meth:`ParquetWarehouse._read_paths`
+    (layout columns stripped, partitioned directories read one by one)
+    and filter by ``cond``, the predicate the pruner tested, so row-group
+    pruning still applies inside the survivors. Nothing kept → the empty
+    contract frame, with no scan scheduled."""
+    if not kept:
+        return empty_frame(wh.spark, schema)
+    return wh._read_paths(kept, schema).filter(cond)
+
+
+def _read_rect(
+    wh: ParquetWarehouse,
+    dirs: list[str],
+    schema: T.StructType,
+    ranges: dict[str, tuple],
+) -> DataFrame:
+    """:func:`_read_pruned` over the files of ``dirs`` whose footer zone
+    maps may meet every ``column: (lo, hi)`` range
+    (``operators/layout.py:prune_files_for_rect``)."""
+    kept, _skipped = prune_files_for_rect(dirs, ranges)
+    cond = reduce(
+        lambda a, b: a & b,
+        [F.col(c).between(F.lit(lo), F.lit(hi)) for c, (lo, hi) in ranges.items()],
+    )
+    return _read_pruned(wh, kept, schema, cond)
+
+
 def read_fact_range(
     wh: ParquetWarehouse,
     table: str,
@@ -1303,31 +1323,20 @@ def read_fact_range(
     read-side twin of the Z-order write path (VERDICT r10 #2): where
     ``read_fact`` lists every live file and leaves pruning to Spark's
     row-group stats, this consults the parquet FOOTER zone maps first
-    (``operators/layout.py:prune_files_for_range``) and hands Spark only
-    the files whose [min, max] rectangle intersects ``[lo, hi]`` — so on
-    a Z-ordered table the measured ~98% file skip becomes wall-time (the
-    skipped files are never listed, opened, or scheduled), not just
-    row-group elimination after the fact. Files without statistics for
-    ``column`` are always read (no false negatives by construction; the
-    equality with the unpruned read is oracle-pinned by
-    ``ev_zorder_range_read`` and the files-opened == audit parity by
-    ``tests/test_layout.py``). The range predicate is ALSO pushed to the
-    scan of the survivors, so row-group pruning still applies inside
-    them. At 100 TB this is Delta/Iceberg's min-max file skipping over
-    the plain-parquet warehouse: the driver reads O(files) KB footers
-    instead of scheduling O(files) tasks."""
-    dirs = wh._live_dirs(table)
-    if not dirs:
-        return empty_frame(wh.spark, schema)
-    files, _skipped = prune_files_for_range(dirs, column, lo, hi)
-    if not files:
-        return empty_frame(wh.spark, schema)
-    return (
-        ParquetWarehouse._strip_layout_cols(
-            wh.spark.read.schema(schema).parquet(*files)
-        )
-        .filter(F.col(column).between(F.lit(lo), F.lit(hi)))
-    )
+    (``operators/layout.py:prune_files_for_rect`` over the one column)
+    and hands Spark only the files whose [min, max] range intersects
+    ``[lo, hi]`` — so on a Z-ordered table the measured ~98% file skip
+    becomes wall-time (the skipped files are never listed, opened, or
+    scheduled), not just row-group elimination after the fact. Files
+    without statistics for ``column`` are always read (no false
+    negatives by construction; the equality with the unpruned read is
+    oracle-pinned by ``ev_zorder_range_read`` and the files-opened ==
+    audit parity by ``tests/test_layout.py``). The range predicate is
+    ALSO pushed to the scan of the survivors, so row-group pruning still
+    applies inside them. At 100 TB this is Delta/Iceberg's min-max file
+    skipping over the plain-parquet warehouse: the driver reads O(files)
+    KB footers instead of scheduling O(files) tasks."""
+    return _read_rect(wh, wh._live_dirs(table), schema, {column: (lo, hi)})
 
 
 def read_fact_rect(
@@ -1346,26 +1355,13 @@ def read_fact_rect(
     ``ev_zorder_rect_read``; physical files-opened == audit pinned in
     ``tests/test_layout.py``). All predicates are also pushed to the
     surviving files' scans."""
-    from etl__project_spark.operators.layout import prune_files_for_rect
-
     if not ranges:
         # an empty conjunction would otherwise prune EVERY file (the
         # rect pruner derives its listing from the predicate columns) —
         # silently returning nothing for "no predicate" is the one
         # wrong answer; make the caller bug loud instead
         raise ValueError("read_fact_rect requires at least one column range")
-    dirs = wh._live_dirs(table)
-    if not dirs:
-        return empty_frame(wh.spark, schema)
-    files, _skipped = prune_files_for_rect(dirs, ranges)
-    if not files:
-        return empty_frame(wh.spark, schema)
-    out = ParquetWarehouse._strip_layout_cols(
-        wh.spark.read.schema(schema).parquet(*files)
-    )
-    for col, (lo, hi) in ranges.items():
-        out = out.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return out
+    return _read_rect(wh, wh._live_dirs(table), schema, ranges)
 
 
 def read_fact_point(
@@ -1380,7 +1376,5 @@ def read_fact_point(
     bloom skipping, kept honest here by the no-false-negative test.
     Rows come back as ``schema`` — the same evolution contract as
     :meth:`ParquetWarehouse.read_fact`."""
-    dirs, _ = prune_dirs_for_key(wh, table, key_col, value)
-    if not dirs:
-        return empty_frame(wh.spark, schema)
-    return wh._read_paths(dirs, schema).filter(F.col(key_col) == F.lit(value))
+    kept, _skipped = prune_dirs_for_key(wh, table, key_col, value)
+    return _read_pruned(wh, kept, schema, F.col(key_col) == F.lit(value))

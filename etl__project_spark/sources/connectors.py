@@ -120,23 +120,6 @@ def write_clustered(
     out.write.mode(mode).parquet(path)
 
 
-def zorder_key(c1, c2, bits: int = 16):
-    """Bit-interleaved Z-order key over two columns already scaled to
-    integers in ``[0, 2^bits)``. Range-partitioning + sorting by this ONE
-    key gives file-level locality on BOTH columns at once (each file
-    covers ~sqrt of the per-column range), where single-column
-    clustering leaves the second column unclustered — the standard
-    multi-dimensional data-skipping layout (Delta OPTIMIZE ZORDER does
-    the same with interleaved bits).
-    """
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        bit1 = F.floor(c1.cast("long") / (2**i)) % 2
-        bit2 = F.floor(c2.cast("long") / (2**i)) % 2
-        z = z + bit1 * F.lit(2 ** (2 * i + 1)) + bit2 * F.lit(2 ** (2 * i))
-    return z
-
-
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -149,9 +132,12 @@ def write_zordered(
     """Z-order-clustered parquet write on two columns: scale each column
     to ``[0, 2^bits)`` by its min/max (one tiny metadata aggregate — the
     only driver-side scalar, same as what a table format stores), derive
-    the interleaved key, then range-partition + sort by it. Row-group
-    stats become tight on BOTH columns, so range predicates on either
-    (or both) skip most files."""
+    the interleaved key (``operators/layout.py:zorder_key``, exact
+    shift/mask over the non-negative scaled ints), then range-partition
+    + sort by it. Row-group stats become tight on BOTH columns, so range
+    predicates on either (or both) skip most files."""
+    from etl__project_spark.operators.layout import zorder_key
+
     lo1, hi1, lo2, hi2 = df.agg(
         F.min(col1), F.max(col1), F.min(col2), F.max(col2)
     ).first()

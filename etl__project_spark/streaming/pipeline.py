@@ -1856,25 +1856,16 @@ def stream_phrase_index_cdc(
     never driver memory; at 100 TB it is a table bucketed by doc_id
     (co-locating ``phrase_match``'s adjacency joins) and
     partition-pruned by term."""
-    from etl__project_spark.datapipe.text_index import positional_postings
-
-    def _merge(existing: DataFrame, batch: DataFrame) -> DataFrame:
-        touched = batch.select("doc_id").distinct()
-        retract = existing.join(touched, ["doc_id"]).select(
-            "doc_id", "pos", "term", (-F.col("sign")).alias("sign")
-        )
-        post = batch.filter(F.col("op") != "D").select("doc_id", "text")
-        new_post = positional_postings(post).select(
-            "*", F.lit(1).cast("long").alias("sign")
-        )
-        return _consolidate_merge(existing, retract.unionByName(new_post))
+    from etl__project_spark.datapipe.text_index import positional_index_delta
 
     apply = _fold_into(
         ParquetWarehouse(spark, warehouse_root),
         "positional_postings",
         POSITIONAL_POSTINGS_SCHEMA,
         lambda batch: _latest_per_key(batch, "doc_id"),
-        _merge,
+        lambda existing, batch: _consolidate_merge(
+            existing, positional_index_delta(existing, batch)
+        ),
     )
     return _fold_stream(
         spark,
@@ -1947,7 +1938,7 @@ def stream_ivf_cdc(
     ordered-transport contract as :func:`stream_text_index_cdc`.
     At 100 TB the cells table is bucketed by centroid_id so a top-k
     probe reads only the probed cells' buckets."""
-    from etl__project_spark.datapipe.similarity import assign_cells
+    from etl__project_spark.datapipe.similarity import ivf_cells_delta
 
     wh = ParquetWarehouse(spark, warehouse_root)
 
@@ -1967,18 +1958,7 @@ def stream_ivf_cdc(
                 "the trained quantizer before starting the posting stream "
                 "(merging now would silently drop this batch's postings)"
             )
-        touched = batch.select(F.col("vec_id").alias("cand_id")).distinct()
-        retract = existing.join(touched, ["cand_id"]).select(
-            "cand_id", "cand_vec", "centroid_id", (-F.col("sign")).alias("sign")
-        )
-        post = batch.filter(F.col("op") != "D").select("vec_id", "embedding")
-        assert_c = assign_cells(post, seeds).select(
-            "cand_id",
-            "cand_vec",
-            F.col("centroid_id").cast("long"),
-            F.lit(1).cast("long").alias("sign"),
-        )
-        return _consolidate_merge(existing, retract.unionByName(assert_c))
+        return _consolidate_merge(existing, ivf_cells_delta(existing, batch, seeds))
 
     apply = _fold_into(
         wh,
@@ -2023,22 +2003,42 @@ VALUE_CDC_SCHEMA = T.StructType(
 )
 
 
-def _require_before_images(batch: DataFrame, before_col: str, state: str) -> None:
-    """Fail a changelog batch that carries U/D rows with a null before-image.
+def _fold_lossy_into(
+    wh: ParquetWarehouse,
+    table: str,
+    schema: T.StructType,
+    before_col: str,
+    delta_fn,
+    merge_fn,
+):
+    """:func:`_fold_into` for a sketch fed by before-images, which first
+    fails a changelog batch that carries U/D rows with a null
+    ``before_col``.
 
     The sketch states these folds maintain (histogram buckets, CMS cells)
     are lossy: a retraction that cannot be derived now can never be derived
     later, so a malformed producer row would silently diverge the state
     forever. Loud failure at the offending batch is the only recoverable
-    posture (ADVICE r8). One driver-side count on the (persisted) batch."""
-    bad = batch.filter(
-        F.col("op").isin("U", "D") & F.col(before_col).isNull()
-    ).count()
-    if bad:
-        raise ValueError(
-            f"{state}: {bad} U/D changelog row(s) with null {before_col} — "
-            "cannot derive retractions; refusing to fold a lossy batch"
-        )
+    posture (ADVICE r8) — never a skip. The batch is persisted for the
+    check and the fold, and released after: one driver-side count."""
+    fold = _fold_into(wh, table, schema, delta_fn, merge_fn)
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        batch = batch.persist()
+        try:
+            bad = batch.filter(
+                F.col("op").isin("U", "D") & F.col(before_col).isNull()
+            ).count()
+            if bad:
+                raise ValueError(
+                    f"{table}: {bad} U/D changelog row(s) with null {before_col} — "
+                    "cannot derive retractions; refusing to fold a lossy batch"
+                )
+            fold(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    return apply
 
 
 def read_value_histogram(wh: ParquetWarehouse) -> DataFrame:
@@ -2085,29 +2085,17 @@ def stream_value_histogram_cdc(
         partial_hist_signed,
     )
 
-    fold = _fold_into(
+    apply = _fold_lossy_into(
         ParquetWarehouse(spark, warehouse_root),
         "value_hist",
         VALUE_HIST_SCHEMA,
+        "old_value",
         lambda batch: partial_hist_signed(
             _signed_images(batch, ["event_type", "value"], {"value": "old_value"}),
             ["event_type"],
         ),
         lambda ex, d: merge_hist_signed(ex, d, ["event_type"]),
     )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            # The histogram is lossy state: a U/D row with a null
-            # before-image cannot be retracted later and the divergence is
-            # permanent, so fail the batch loudly rather than skip it
-            # (ADVICE r8 — silent drop made the state unhealable).
-            _require_before_images(batch, "old_value", "value_hist")
-            fold(batch, batch_id)
-        finally:
-            batch.unpersist()
-
     # max_files_per_trigger paces a soak: one availableNow run replays
     # the landing dir as many real micro-batches (tests/test_soak.py)
     return _fold_stream(
@@ -2115,7 +2103,7 @@ def stream_value_histogram_cdc(
         VALUE_CDC_SCHEMA,
         landing_dir,
         checkpoint_dir,
-        _apply,
+        apply,
         available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
@@ -2182,32 +2170,22 @@ def stream_cms_cdc(
         cms_merge_signed,
     )
 
-    fold = _fold_into(
+    apply = _fold_lossy_into(
         ParquetWarehouse(spark, warehouse_root),
         "cms_cells",
         CMS_CELLS_SCHEMA,
+        "old_key",
         lambda batch: cms_cells_signed(
             _signed_images(batch, ["key"], {"key": "old_key"}), "key"
         ),
         cms_merge_signed,
     )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            # Same loud-failure posture as the histogram stream: the grid
-            # cannot self-heal a missed retraction (ADVICE r8).
-            _require_before_images(batch, "old_key", "cms_cells")
-            fold(batch, batch_id)
-        finally:
-            batch.unpersist()
-
     return _fold_stream(
         spark,
         KEY_CDC_SCHEMA,
         landing_dir,
         checkpoint_dir,
-        _apply,
+        apply,
         available_now,
         max_files_per_trigger=max_files_per_trigger,
     )

@@ -320,12 +320,12 @@ def test_mixed_layout_dirs_stay_readable(spark, tmp_path):
 def test_read_fact_range_opens_exactly_the_audit_files(spark, tmp_path):
     """The read-side half of the Z-order feature (VERDICT r10 #2):
     read_fact_range's pruned file listing IS the footer audit —
-    df.inputFiles() == prune_files_for_range's survivors, and their
+    df.inputFiles() == prune_files_for_rect's survivors, and their
     count equals files_read_under_range's modeled n_read. And the
     pruned read returns exactly the rows the unpruned read + filter
     returns (the oracle twin of ev_zorder_range_read, pinned physically
     here)."""
-    from etl__project_spark.operators.layout import prune_files_for_range
+    from etl__project_spark.operators.layout import prune_files_for_rect
     from etl__project_spark.plans.star_load import read_fact_range
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
@@ -338,7 +338,7 @@ def test_read_fact_range_opens_exactly_the_audit_files(spark, tmp_path):
     # recluster test's note on sf0.001's 15-value user domain)
     lo, hi = 32, 63
     audit = files_read_under_range(bdir, "vb", lo, hi)
-    must, skipped = prune_files_for_range([bdir], "vb", lo, hi)
+    must, skipped = prune_files_for_rect([bdir], {"vb": (lo, hi)})
     assert audit["n_files"] == len(must) + len(skipped)
     assert audit["n_read"] == len(must)
     assert audit["skip_ratio"] > 0  # the layout actually prunes here
@@ -498,15 +498,14 @@ def test_read_range_on_versioned_snapshot(spark, tmp_path):
 
 def test_read_fact_rect_multiplies_the_skips(spark, tmp_path):
     """The rectangle read's pruned set is exactly the INTERSECTION of
-    the per-dimension audits' survivors (a conjunct excludes a file
-    when its zone provably misses), it opens exactly those files, and
-    it returns exactly the doubly-filtered unpruned rows. On the
-    Z-layout the rectangle prunes at least as hard as either dimension
-    alone."""
-    from etl__project_spark.operators.layout import (
-        prune_files_for_range,
-        prune_files_for_rect,
-    )
+    the per-dimension survivors (a conjunct excludes a file when its
+    zone provably misses), it opens exactly those files, and it returns
+    exactly the doubly-filtered unpruned rows. On the Z-layout the
+    rectangle prunes at least as hard as either dimension alone. The
+    per-dimension reference is computed from the footers directly
+    (uncached ``parquet_file_zone_maps``), independently of the
+    pruner and its sidecar cache."""
+    from etl__project_spark.operators.layout import prune_files_for_rect
     from etl__project_spark.plans.star_load import read_fact_rect
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
@@ -516,8 +515,16 @@ def test_read_fact_rect_multiplies_the_skips(spark, tmp_path):
     dirs = wh._live_dirs("ev_z")
     ranges = {"ub": (4, 11), "vb": (32, 95)}
 
-    must_u, _ = prune_files_for_range(dirs, "ub", *ranges["ub"])
-    must_v, _ = prune_files_for_range(dirs, "vb", *ranges["vb"])
+    def footer_survivors(col):
+        lo, hi = ranges[col]
+        return [
+            fp
+            for d in dirs
+            for fp, mn, mx in parquet_file_zone_maps(d, col)
+            if mx >= lo and mn <= hi
+        ]
+
+    must_u, must_v = footer_survivors("ub"), footer_survivors("vb")
     must_rect, skipped_rect = prune_files_for_rect(dirs, ranges)
     assert set(must_rect) == set(must_u) & set(must_v)
     assert len(must_rect) <= min(len(must_u), len(must_v))

@@ -884,6 +884,63 @@ def test_versioned_tables_commit_through_one_protocol():
     }, sites
 
 
+def test_warehouse_reads_share_one_body():
+    """In the style of the commit-protocol gate: in
+    ``plans/star_load.py`` only ``_read_paths`` (every table read,
+    pruned or not), ``compact_fact`` (mergeSchema), ``_compact_sidecars``
+    (the bloom rebuild) and ``index_fact_batch`` (one key column) open a
+    Spark reader. The range, rectangle and snapshot-range reads once
+    each hand-copied their own list → prune → read → strip body."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "etl__project_spark"
+    tree = ast.parse((pkg / "plans" / "star_load.py").read_text())
+    sites: list[str] = []
+
+    def walk(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                walk(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr == "read"
+                and ast.unparse(child.value).split(".")[-1] == "spark"
+            ):
+                sites.append(func)
+            walk(child, func)
+
+    walk(tree, "<module>")
+    assert set(sites) == {
+        "_read_paths", "compact_fact", "_compact_sidecars", "index_fact_batch"
+    }, sites
+
+
+# Queries that once left a persisted frame in the session cache after
+# their result was collected: a later query persisting the same plan
+# then logged "Asked to cache already cached data", and the cached
+# frames outlived the query that made them.
+CACHE_FREE_QUERIES = [
+    "doc_dedup_keep_best",
+    "doc_dup_size_histogram",
+    "vs_fact_late_dims",
+    "vs_scd2_asof_lookup",
+    "doc_dedup_canonical",
+    "doc_minhash_est",
+    "doc_split_leakage_audit",
+]
+
+
+@pytest.mark.parametrize("name", CACHE_FREE_QUERIES)
+def test_query_leaves_nothing_cached(spark, name):
+    spark.catalog.clearCache()
+    QUERIES[name](spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a persisted frame in the session cache"
+    )
+
+
 def test_streams_start_through_one_runner():
     """In the style of the commit-protocol gate: in
     ``streaming/pipeline.py`` only ``_fold_stream`` touches the stream

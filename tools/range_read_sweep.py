@@ -9,7 +9,9 @@ then time the same range aggregate through
 * the PRUNED path — ``read_fact_range`` (file listing cut down from
   parquet footer zone maps before Spark schedules anything),
 
-reporting the footer audit's files-read split alongside both walls.
+reporting the pruner's files-read split (``prune_files_for_rect`` over
+the one column, the listing ``read_fact_range`` reads) alongside both
+walls.
 
 Usage: python tools/range_read_sweep.py [sf_dir ...]
 Defaults: /root/testdata/sf0.1 .scratch/sf1 .scratch/sf10
@@ -30,7 +32,7 @@ from pyspark.sql import types as T  # noqa: E402
 
 from etl__project_spark.operators.layout import (  # noqa: E402
     ZOrderLayout,
-    prune_files_for_range,
+    prune_files_for_rect,
 )
 from etl__project_spark.plans.star_load import (  # noqa: E402
     ParquetWarehouse,
@@ -77,8 +79,8 @@ def main() -> None:
             "ev_z", q, "b0",
             layout=ZOrderLayout("ub", "vb", bits=8, n_files=64),
         )
-        must, skipped = prune_files_for_range(
-            wh._live_dirs("ev_z"), "vb", LO, HI
+        must, skipped = prune_files_for_rect(
+            wh._live_dirs("ev_z"), {"vb": (LO, HI)}
         )
 
         def agg(df):
