@@ -17,7 +17,7 @@ Scale design
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl__project_spark.session import state_checkpoint

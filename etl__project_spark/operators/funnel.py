@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from etl__project_spark.session import state_checkpoint
 
-from etl__project_spark.operators.ivm import cdc_to_signed_delta, consolidate
+from etl__project_spark.operators.ivm import touched_users_cdc
 
 STAGES = [
     ("t1", "signup", None),
@@ -93,9 +93,6 @@ def maintain_funnel_cdc(
     State: the signed event log (user-bucketed at scale), the per-user
     stage table, and the 4 counters. ``checkpoint`` materializes each
     so batch N's plan is O(1) in N."""
-    key_cols = key_cols or ["event_id"]
-    sign1 = F.lit(1).cast("long").alias("sign")
-    state = initial.select("*", sign1)
     users = funnel_user_times(initial, user_col, ts_col)
     counters = users.agg(
         *[
@@ -104,24 +101,18 @@ def maintain_funnel_cdc(
         ]
     )
     if checkpoint:
-        state = state_checkpoint(state, table_sized=True)
         users = state_checkpoint(users, table_sized=True)
         counters = state_checkpoint(counters, table_sized=False)
     cnames = [f"c{i+1}" for i in range(len(STAGES))]
-    for batch in cdc_batches:
-        delta = cdc_to_signed_delta(
-            state, batch, key_cols, op_col=op_col, delete_op=delete_op
-        )
-        if checkpoint:
-            delta = state_checkpoint(delta, table_sized=False)
-        touched = delta.select(user_col).distinct()
-        state = consolidate(state.unionByName(delta))
-        if checkpoint:
-            state = state_checkpoint(state, table_sized=True)
-        payload = [c for c in state.columns if c != "sign"]
-        touched_events = state.join(touched, [user_col], "left_semi").select(
-            *payload
-        )
+    for touched, touched_events in touched_users_cdc(
+        initial,
+        cdc_batches,
+        user_col,
+        key_cols or ["event_id"],
+        op_col,
+        delete_op,
+        checkpoint,
+    ):
         new_vec = funnel_user_times(touched_events, user_col, ts_col)
         old_vec = users.join(touched, [user_col], "left_semi")
         d = (

@@ -201,6 +201,37 @@ def cdc_to_signed_delta(
     return retractions.unionByName(inserts)
 
 
+def touched_users_cdc(
+    initial: DataFrame,
+    cdc_batches: list[DataFrame],
+    user_col: str,
+    key_cols: list[str],
+    op_col: str = "op",
+    delete_op: str = "D",
+    checkpoint: bool = True,
+):
+    """The per-user "re-derive per touched group" front half: fold each
+    CDC batch into the signed event log and yield ``(touched,
+    touched_events)`` — the distinct users the batch touched, and those
+    users' post-batch events (payload columns, no sign). ``checkpoint``
+    materializes the log and each delta so batch N's plan is O(1) in N."""
+    state = initial.select("*", F.lit(1).cast("long").alias("sign"))
+    if checkpoint:
+        state = state_checkpoint(state, table_sized=True)
+    for batch in cdc_batches:
+        delta = cdc_to_signed_delta(
+            state, batch, key_cols, op_col=op_col, delete_op=delete_op
+        )
+        if checkpoint:
+            delta = state_checkpoint(delta, table_sized=False)
+        touched = delta.select(user_col).distinct()
+        state = consolidate(state.unionByName(delta))
+        if checkpoint:
+            state = state_checkpoint(state, table_sized=True)
+        payload = [c for c in state.columns if c != "sign"]
+        yield touched, state.join(touched, [user_col], "left_semi").select(*payload)
+
+
 def maintain_join_view_cdc(
     initial_a: DataFrame,
     initial_b: DataFrame,

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from etl__project_spark.session import state_checkpoint
 
-from etl__project_spark.operators.ivm import cdc_to_signed_delta, consolidate
+from etl__project_spark.operators.ivm import touched_users_cdc
 
 _WEEK_US = 604_800_000_000
 
@@ -98,27 +98,18 @@ def maintain_retention_cdc(
     log (oracle-pinned by ``ev_retention_cdc`` plus re-cohorting replay
     tests). ``checkpoint`` materializes the log and membership so batch
     N's plan is O(1) in N."""
-    key_cols = key_cols or ["event_id"]
-    sign1 = F.lit(1).cast("long").alias("sign")
-    state = initial.select("*", sign1)
     membership = retention_cells(initial, user_col, ts_col)
     if checkpoint:
-        state = state_checkpoint(state, table_sized=True)
         membership = state_checkpoint(membership, table_sized=True)
-    for batch in cdc_batches:
-        delta = cdc_to_signed_delta(
-            state, batch, key_cols, op_col=op_col, delete_op=delete_op
-        )
-        if checkpoint:
-            delta = state_checkpoint(delta, table_sized=False)
-        touched = delta.select(user_col).distinct()
-        state = consolidate(state.unionByName(delta))
-        if checkpoint:
-            state = state_checkpoint(state, table_sized=True)
-        payload = [c for c in state.columns if c != "sign"]
-        touched_events = state.join(touched, [user_col], "left_semi").select(
-            *payload
-        )
+    for touched, touched_events in touched_users_cdc(
+        initial,
+        cdc_batches,
+        user_col,
+        key_cols or ["event_id"],
+        op_col,
+        delete_op,
+        checkpoint,
+    ):
         membership = membership.join(
             touched, [user_col], "left_anti"
         ).unionByName(retention_cells(touched_events, user_col, ts_col))

@@ -22,7 +22,6 @@ timestamps are emitted as formatted strings.
 from __future__ import annotations
 
 from etl__project_spark.plans.catalog._registry import ORACLES, QUERIES, query  # noqa: F401
-from etl__project_spark.plans.catalog._shared import *  # noqa: F401,F403
 # the two private helpers tests import through the package
 from etl__project_spark.plans.catalog._shared import _parsed, _zexpr  # noqa: F401
 from etl__project_spark.sources import load_table  # noqa: F401

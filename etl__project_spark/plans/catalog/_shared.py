@@ -4,55 +4,13 @@ round 9 (VERDICT r8 #7); bodies unchanged."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from etl__project_spark.operators import (
-    build_fact,
-    derive_dim,
-    derive_dim_time,
-    filter_videostart,
-    filter_videostart_like,
-    filter_well_formed_title,
-    max_lengths,
-    merge_insert_new,
-    parse_raw,
-    record_count,
-    scd1_upsert,
-    with_dense_ids,
-)
-from etl__project_spark.datapipe.graph import (
-    textrank,
-    triangle_stats,
-    word_cooccur_edges,
-)
+from etl__project_spark.operators import derive_dim, parse_raw, with_dense_ids
 from etl__project_spark.refdata import VIDEO_DATA_CTE, synth_video_data
 from etl__project_spark.session import state_checkpoint
 from etl__project_spark.sources.tables import fan_out_by_rows
-from etl__project_spark.datapipe import (  # noqa: E402
-    brute_force_topk,
-    bucketed_topk,
-    char_shingles,
-    dedup_exact,
-    doc_fingerprint,
-    jaccard_prefix_pairs,
-    lang_id_heuristic,
-    lsh_candidate_pairs,
-    minhash_signature,
-    ngram_jaccard_pairs,
-    sign_bucket,
-    simhash,
-    text_stats,
-)
-from etl__project_spark.datapipe.multimodal import extract_features, synth_media  # noqa: E402
-from etl__project_spark.operators import scd2_upsert  # noqa: E402
-from etl__project_spark.operators.asof import asof_join  # noqa: E402
-from etl__project_spark.datapipe.dedup import contamination_check  # noqa: E402
-from etl__project_spark.datapipe.sampling import hash_bucket, hash_sample  # noqa: E402
-from etl__project_spark.datapipe.text import pii_scrub, quality_rules  # noqa: E402
-from etl__project_spark.datapipe.linalg import covariance_oracle_sql  # noqa: E402
-
-from etl__project_spark.plans.catalog._registry import ORACLES, QUERIES, query  # noqa: F401
+from etl__project_spark.plans.catalog._registry import ORACLES
 
 
 def load_table(spark, sf_dir, table):
@@ -67,8 +25,7 @@ def load_table(spark, sf_dir, table):
     return _pkg.load_table(spark, sf_dir, table)
 
 
-BROADCAST_FILE_LIMIT_ENV = "SPARK_GRAFT_BROADCAST_FILE_LIMIT"
-_BROADCAST_FILE_LIMIT_DEFAULT = 256 * 1024 * 1024  # bytes on disk
+BROADCAST_FILE_LIMIT = 256 * 1024 * 1024  # bytes on disk
 
 
 def _table_bytes(sf_dir: str, table: str) -> int | None:
@@ -106,19 +63,12 @@ def size_gated_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
     fixture loader) = no statistic = keep the hint, matching the
     ``join_stats`` convention in ``operators/fact.py:build_fact``.
 
-    The limit is env-tunable (``SPARK_GRAFT_BROADCAST_FILE_LIMIT``,
-    default 256 MB of compressed parquet — a few hundred MB built, well
-    under the 8 GB broadcast cap); read at call time so tests can flip
-    the gate. Plan-only: join results are identical either way."""
-    import os
-
-    limit = int(
-        os.environ.get(
-            BROADCAST_FILE_LIMIT_ENV, str(_BROADCAST_FILE_LIMIT_DEFAULT)
-        )
-    )
+    The limit is ``BROADCAST_FILE_LIMIT``, 256 MB of compressed parquet
+    — a few hundred MB built, well under the 8 GB broadcast cap; it is
+    read at call time so tests can flip the gate. Plan-only: join
+    results are identical either way."""
     size = _table_bytes(sf_dir, table)
-    if size is not None and size > limit:
+    if size is not None and size > BROADCAST_FILE_LIMIT:
         return df
     return F.broadcast(df)
 
@@ -225,7 +175,8 @@ def _money_sum_raw(expr):
     both engines by construction: ``floor(x * 10000 + 0.5)`` per term
     (half-up at 4 decimals of the BINARY value), summed as exact
     integers. Downstream projections divide/floor in integer space —
-    never an engine ``round()``. SQL twin: ``_msum_raw``.
+    never an engine ``round()``. The oracle SQL spells the same
+    expression inline: ``sum(CAST(floor((x) * 10000 + 0.5) AS BIGINT))``.
 
     The sum accumulates in DECIMAL(38,0): a 100 TB fact table's scaled
     units can exceed 2^63 (DuckDB silently promotes its BIGINT sum to
@@ -242,7 +193,7 @@ def _money_sum_raw(expr):
 def _money_sum(expr):
     """2-decimal money value from the exact scaled sum (half-up to
     cents in integer space, emitted as cents/100 — both engines compute
-    the identical double). SQL twin: ``_msum``."""
+    the identical double)."""
     return F.floor(_money_sum_raw(expr) / F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
 
 
@@ -250,21 +201,6 @@ def _quant4(expr):
     """4-decimal projection of an arbitrary (cross-engine-identical)
     double without engine round(): floor(x*1e4 + 0.5) / 1e4."""
     return F.floor(expr * 10000 + F.lit(0.5)) / F.lit(10000.0)
-
-
-def _msum_raw(expr: str) -> str:
-    """DuckDB twin of ``_money_sum_raw`` (sum of BIGINT 1e-4 units)."""
-    return f"sum(CAST(floor(({expr}) * 10000 + 0.5) AS BIGINT))"
-
-
-def _msum(expr: str) -> str:
-    """DuckDB twin of ``_money_sum``."""
-    return f"(floor({_msum_raw(expr)} / 100.0 + 0.5) / 100.0)"
-
-
-def _q4(expr: str) -> str:
-    """DuckDB twin of ``_quant4``."""
-    return f"(floor(({expr}) * 10000 + 0.5) / 10000.0)"
 
 
 def _vs_fact_dims(parsed):

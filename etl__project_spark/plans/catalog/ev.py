@@ -6,104 +6,22 @@ the safety net."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from etl__project_spark.operators import (
-    build_fact,
-    derive_dim,
-    derive_dim_time,
-    filter_videostart,
-    filter_videostart_like,
-    filter_well_formed_title,
-    max_lengths,
-    merge_insert_new,
-    parse_raw,
-    record_count,
-    scd1_upsert,
-    with_dense_ids,
-)
-from etl__project_spark.datapipe.graph import (
-    textrank,
-    triangle_stats,
-    word_cooccur_edges,
-)
-from etl__project_spark.refdata import VIDEO_DATA_CTE, synth_video_data
 from etl__project_spark.session import state_checkpoint
-from etl__project_spark.datapipe import (  # noqa: E402
-    brute_force_topk,
-    bucketed_topk,
-    char_shingles,
-    dedup_exact,
-    doc_fingerprint,
-    jaccard_prefix_pairs,
-    lang_id_heuristic,
-    lsh_candidate_pairs,
-    minhash_signature,
-    ngram_jaccard_pairs,
-    sign_bucket,
-    simhash,
-    text_stats,
-)
-from etl__project_spark.datapipe.multimodal import extract_features, synth_media  # noqa: E402
-from etl__project_spark.operators import scd2_upsert  # noqa: E402
-from etl__project_spark.operators.asof import asof_join  # noqa: E402
-from etl__project_spark.datapipe.dedup import contamination_check  # noqa: E402
-from etl__project_spark.datapipe.sampling import hash_bucket, hash_sample  # noqa: E402
-from etl__project_spark.datapipe.text import pii_scrub, quality_rules  # noqa: E402
-from etl__project_spark.datapipe.linalg import covariance_oracle_sql  # noqa: E402
-
-from etl__project_spark.plans.catalog._registry import ORACLES, QUERIES, query  # noqa: F401
-from etl__project_spark.plans.catalog._shared import (  # noqa: F401
+from etl__project_spark.operators.asof import asof_join
+from etl__project_spark.datapipe.sampling import hash_bucket
+from etl__project_spark.plans.catalog._registry import query
+from etl__project_spark.plans.catalog._shared import (
     load_table,
-    _video,
-    _parsed,
-    PARSED_CTE,
-    DIMS_CTE,
-    _int,
-    _money_sum_raw,
     _money_sum,
     _quant4,
-    _msum_raw,
-    _msum,
-    _q4,
-    _vs_fact_dims,
-    _SHINGLE_LIST,
-    _LSH_SQL_SIG,
-    _simhash_oracle,
-    _COS,
-    _BUCKET,
-    _PAIR_COS,
-    _IVF_COS_ES,
-    _IVF_COS_QX,
     _EVENT_TYPES,
-    _SHINGLE13,
-    _SIG_CTE,
-    _BPE_MERGE_STEP,
-    _BPE_COUNTS,
     _funnel_counts,
-    _pq_ctes,
-    _pq_sql,
     _zexpr,
-    _kmeans_ctes,
-    _kmeans_iter_sql,
-    _simhash_pairs_oracle,
-    _GOPHER_KEEP,
-    _pipeline_e2e_sql,
-    _znorm_scores,
-    _containment_sql,
-    _SHINGLE5,
-    _containment_reps_sql,
-    _simhash_wide_pairs_oracle,
-    _bm25_micro,
     _ewma_sql,
-    _HALF_SIG,
     _bot_screen,
-    _WORD_GRAPH_SQL,
-    _textrank_iter_sql,
-    _kcore_iter_sql,
-    _ppr_iter_sql,
     _event_edge_liveness,
 )
 

@@ -43,13 +43,10 @@ from etl__project_spark.session import empty_frame, state_checkpoint
 
 # Output file sizing for fact appends (guide §6): per-row estimate for
 # the 4-surrogate-key fact (4 int64 + parquet framing) and the target
-# output file size. Local fixtures produce 1 file per batch; a cluster
-# run sizes via SPARK_GRAFT_TARGET_FILE_BYTES (128 MB default keeps
-# files in the guide's 128 MB - 1 GB band).
+# output file size. Local fixtures produce 1 file per batch; 128 MB
+# keeps a cluster run's files in the guide's 128 MB - 1 GB band.
 FACT_ROW_BYTES = 64
-TARGET_FILE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TARGET_FILE_BYTES", str(128 * 1024 * 1024))
-)
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 DIM_SPECS = [
     # (table, natural key column in parsed staging, skey column)
@@ -433,8 +430,8 @@ class ParquetWarehouse:
     # even after its directory was merged away. Before any compaction the
     # directory listing itself is the manifest (no extra commit I/O on
     # the hot append path). Single writer assumed (foreachBatch
-    # serializes micro-batches); a real table format (Delta/Iceberg,
-    # gated in sources/connectors.py) replaces this wholesale.
+    # serializes micro-batches); a real table format (Delta/Iceberg, not
+    # available in this build) would replace this wholesale.
 
     def fact_batch_dir(self, table: str, batch_id: str) -> str:
         return os.path.join(self._tdir(table), f"batch={batch_id}")

@@ -2,7 +2,6 @@ from etl__project_spark.sources.readers import (  # noqa: F401
     read_jsonl,
     read_orc,
     read_raw_csv,
-    read_raw_parquet,
     write_csv,
     write_jsonl,
     write_orc,
@@ -10,6 +9,5 @@ from etl__project_spark.sources.readers import (  # noqa: F401
 from etl__project_spark.sources.tables import (  # noqa: F401
     TABLES,
     load_table,
-    load_tables,
     normalize_timestamps,
 )

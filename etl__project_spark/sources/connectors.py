@@ -1,6 +1,7 @@
-"""Additional sources/sinks beyond CSV+parquet: JSON, ORC, JDBC, and
-bucketed tables; Delta/Iceberg gated behind import-tries (their jars are
-not in this environment).
+"""Table layouts beyond a plain parquet write: Hive partitions,
+range-clustered and Z-ordered files, bucketed tables, and reads over
+evolving schemas. JSON-lines and ORC sources/sinks live in
+``sources/readers.py``.
 
 Bucketing is the co-located-join scale tool: two tables bucketed on the
 same key by the same bucket count join WITHOUT a shuffle
@@ -12,58 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-class ConnectorUnavailable(RuntimeError):
-    """Raised when an optional table-format/connector jar is absent."""
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """JSON-lines scan; pass an explicit schema in production (inference
-    is a full extra pass over the data)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """JDBC scan. Always provide partition_column+bounds for real tables —
-    without them the whole table streams through ONE connection."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def write_partitioned(
@@ -171,26 +120,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake scan — requires delta-spark jars (not in this image)."""
-    try:
-        import delta  # noqa: F401
-    except ImportError as exc:
-        raise ConnectorUnavailable(
-            "delta-spark is not installed; Delta tables unavailable. "
-            "The SCD1/SCD2/merge operators accept any DataFrame source, so "
-            "plain-parquet warehouses (plans/star_load.py) cover the same "
-            "semantics without the transactional log."
-        ) from exc
-    return spark.read.format("delta").load(path)
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    """Iceberg scan — requires iceberg-spark-runtime (not in this image)."""
-    if not spark.conf.get("spark.sql.catalog.iceberg", None):
-        raise ConnectorUnavailable(
-            "no iceberg catalog configured; Iceberg tables unavailable"
-        )
-    return spark.read.table(table)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from etl__project_spark.session import state_checkpoint
+
 # Raw video_data schema (summary.pdf p.2; snow pipe.sql:6-11). Explicit —
 # never inferred — so malformed files fail loudly and scans prune correctly.
 RAW_SCHEMA = T.StructType(
@@ -58,13 +60,15 @@ def read_csv_with_rejects(
     — the production ingest contract: bad rows land in a reject table
     for triage, good rows flow on, and ``count(good) + count(rejects) ==
     input lines`` stays auditable (the O1 record-count audit applies to
-    both sides). The parsed batch is persisted before the split — Spark
-    disallows corrupt-column-only queries over a raw file scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN; its own
-    documented remedy is to cache the parse), and persisting also makes
-    the two sides one parse instead of two. O(batch) memory, matching
-    the per-batch ingest pattern; callers unpersist either side when
-    done.
+    both sides). The parsed batch is materialized by a local checkpoint
+    before the split — Spark disallows corrupt-column-only queries over
+    a raw file scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN;
+    its documented remedy is to materialize the parse), and the
+    checkpoint also makes the two sides one parse instead of two. The
+    checkpoint lives in the block manager, not the session cache, so
+    nothing is left to unpersist; its blocks go when both sides are
+    garbage-collected. O(batch) memory, matching the per-batch ingest
+    pattern.
     """
     base = schema or RAW_SCHEMA
     with_corrupt = T.StructType(
@@ -79,15 +83,11 @@ def read_csv_with_rejects(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(with_corrupt)
         .csv(path)
-    ).persist()
+    )
+    df = state_checkpoint(df, table_sized=False)
     good = df.filter(df["_corrupt_record"].isNull()).drop("_corrupt_record")
     rejects = df.filter(df["_corrupt_record"].isNotNull()).select("_corrupt_record")
     return good, rejects
-
-
-def read_raw_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S2 — parquet scan (columnar, predicate pushdown, the scale path)."""
-    return spark.read.parquet(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -203,9 +203,3 @@ def fan_out_by_rows(
     if n <= 1 or row_groups >= n:
         return df
     return df.repartition(n)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

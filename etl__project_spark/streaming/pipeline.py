@@ -8,7 +8,8 @@ Reference mapping:
   (exactly-once file tracking via the checkpoint)
 - T2 CDC stream            → each micro-batch IS the delta
 - T3 scheduled+gated task  → trigger(availableNow) for catch-up semantics
-  or processingTime for a cadence; the has-data gate is inherent
+  (every fold); ``stream_star_load`` also takes processingTime for the
+  reference's cadence; the has-data gate is inherent
 - T4 task DAG              → parse → dedup-merge → dim upsert → fact
   append chained as plain function calls inside the batch fn
 - T5 MERGE dedup           → within-batch dropDuplicates + left-anti vs
@@ -77,7 +78,6 @@ def _fold_stream(
     landing_dir: str,
     checkpoint_dir: str,
     apply,
-    available_now: bool,
     *,
     max_files_per_trigger: int | None = None,
     processing_time: str | None = None,
@@ -85,9 +85,11 @@ def _fold_stream(
 ):
     """Start ``apply(batch, batch_id)`` over the files landing in
     ``landing_dir`` (JSON lines, or headed CSV with ``csv``) and return
-    the StreamingQuery. ``max_files_per_trigger`` is the file source's
-    backpressure knob: ``availableNow`` honors it, so a backlog drains
-    as several bounded micro-batches instead of one giant one."""
+    the StreamingQuery. The trigger is ``processingTime=processing_time``
+    when given, else ``availableNow``: drain the backlog, then stop.
+    ``max_files_per_trigger`` is the file source's backpressure knob:
+    ``availableNow`` honors it, so a backlog drains as several bounded
+    micro-batches instead of one giant one."""
     reader = spark.readStream.schema(schema)
     if csv:
         reader = (
@@ -101,11 +103,9 @@ def _fold_stream(
     writer = source.writeStream.foreachBatch(apply).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    if processing_time is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=processing_time).start()
 
 
 def _fold_into(
@@ -348,8 +348,11 @@ def stream_star_load(
 ):
     """Start the streaming star load over a CSV landing directory.
 
-    Returns the StreamingQuery; callers use ``awaitTermination()`` (or
-    ``availableNow`` which self-terminates after draining the backlog).
+    Returns the StreamingQuery. With ``available_now`` (the default) it
+    drains the backlog and stops; ``awaitTermination()`` waits for that.
+    ``available_now=False`` with ``processing_time`` (e.g. ``"60
+    minutes"``, SURVEY.md T3's schedule) runs on that cadence until
+    stopped; ``available_now=True`` wins when both are given.
     ``compact_every=N`` folds the append-only tables' batch directories
     into one compacted directory every N micro-batches (long-running
     streams otherwise accumulate one small dir per batch).
@@ -392,9 +395,8 @@ def stream_star_load(
             join_stats_sources,
             broadcast_row_limit,
         ),
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
-        processing_time=processing_time,
+        processing_time=None if available_now else processing_time,
         csv=True,
     )
 
@@ -423,7 +425,6 @@ def stream_cdc_apply(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain an upsert/delete CDC view from a JSON-lines changelog
     stream — the streaming face of ``operators/merge.py:cdc_apply``.
@@ -452,9 +453,7 @@ def stream_cdc_apply(
         lambda batch: _latest_per_key(batch, "id"),
         _latest_wins_merge("id"),
     )
-    return _fold_stream(
-        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, CDC_SCHEMA, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming transition-matrix maintenance --------------------------------
@@ -489,7 +488,6 @@ def stream_transition_matrix(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Incrementally maintain the Markov transition matrix
     (``ev_transition_matrix``'s counts) over a JSON-lines event stream —
@@ -562,9 +560,7 @@ def stream_transition_matrix(
             _latest_wins_merge("user_id", seq),
         )
 
-    return _fold_stream(
-        spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming signed join-view maintenance ---------------------------------
@@ -668,7 +664,6 @@ def stream_join_view_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain the join view ``static_a ⋈ B`` while B arrives as a CDC
     changelog stream (JSON lines of ``CDC_SCHEMA``: id/seq/op/v) — the
@@ -687,7 +682,6 @@ def stream_join_view_cdc(
         landing_dir,
         checkpoint_dir,
         _join_view_apply(spark, static_a, warehouse_root, "inner"),
-        available_now,
     )
 
 
@@ -703,7 +697,6 @@ def stream_leftjoin_view_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain the LEFT-OUTER join view ``static_a ⟕ B`` while B
     arrives as a CDC changelog stream — the streaming face of
@@ -721,7 +714,6 @@ def stream_leftjoin_view_cdc(
         landing_dir,
         checkpoint_dir,
         _join_view_apply(spark, static_a, warehouse_root, "left"),
-        available_now,
     )
 
 
@@ -769,7 +761,6 @@ def stream_rollup_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain a (count, sum, MIN, MAX, DISTINCT-count) rollup while the
     base table receives CDC churn — the streaming face of the round-7
@@ -835,9 +826,7 @@ def stream_rollup_cdc(
         )
         wh.publish_merged("rc_base", delta, JV_STATE_SCHEMA, bid, _consolidate_merge)
 
-    return _fold_stream(
-        spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, CDC_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming dedup-index maintenance ---------------------------------------
@@ -873,7 +862,6 @@ def stream_dedup_index(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Continuous-ingest near-dup detection: documents arrive as a JSON-
     lines stream and the MinHash-LSH index is maintained per micro-batch
@@ -922,9 +910,7 @@ def stream_dedup_index(
             lambda ex, d: ex.unionByName(d),
         )
 
-    return _fold_stream(
-        spark, DOC_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, DOC_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming SCD Type-2 dimension maintenance -----------------------------
@@ -961,7 +947,6 @@ def stream_scd2_dim(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain an SCD Type-2 dimension from a streaming feed of
     attribute-change records — the streaming face of
@@ -1012,9 +997,7 @@ def stream_scd2_dim(
 
         wh.publish_merged("scd2_dim", b, SCD2_DIM_SCHEMA, str(batch_id), merge)
 
-    return _fold_stream(
-        spark, SCD2_DELTA_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, SCD2_DELTA_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 SCD2M_DELTA_SCHEMA = T.StructType(
@@ -1050,7 +1033,6 @@ def stream_scd2_dim_multi(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain a MULTI-VERSION SCD2 dimension from a streaming change
     feed — the streaming face of ``operators/dims.py:
@@ -1094,9 +1076,7 @@ def stream_scd2_dim_multi(
         lambda batch: state_checkpoint(batch, table_sized=False),
         merge,
     )
-    return _fold_stream(
-        spark, SCD2M_DELTA_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, SCD2M_DELTA_SCHEMA, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming incremental table statistics ---------------------------------
@@ -1135,7 +1115,6 @@ def stream_column_stats(
     checkpoint_dir: str,
     schema: T.StructType,
     cols: list[str],
-    available_now: bool = True,
 ):
     """ANALYZE maintained AT INGEST: per micro-batch, fold the batch's
     contribution into a persistent per-column statistics table — the
@@ -1214,9 +1193,7 @@ def stream_column_stats(
             _agg_merge(["column_name", "reg"], rho=_max),
         )
 
-    return _fold_stream(
-        spark, schema, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, schema, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming ANN (PQ) index maintenance -----------------------------------
@@ -1263,7 +1240,6 @@ def stream_ann_index(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Similarity search over a GROWING corpus: embeddings arrive as a
     stream and the PQ index is maintained per micro-batch — train
@@ -1313,9 +1289,7 @@ def stream_ann_index(
         codes = pq_encode(b, read_ann_codebooks(wh))
         wh.fact_append("ann_codes", codes, str(batch_id))
 
-    return _fold_stream(
-        spark, EMB_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, EMB_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming daily-series monitor maintenance -----------------------------
@@ -1350,7 +1324,6 @@ def stream_daily_counts(
     checkpoint_dir: str,
     schema: T.StructType,
     ts_col: str = "ts",
-    available_now: bool = True,
 ):
     """The daily-series monitors maintained AT INGEST: per micro-batch,
     fold the batch's per-day event counts into a persistent daily
@@ -1374,9 +1347,7 @@ def stream_daily_counts(
         ),
         _agg_merge(["day"], x=_sum),
     )
-    return _fold_stream(
-        spark, schema, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, schema, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming survival-curve (per-user conversion) maintenance -------------
@@ -1414,7 +1385,6 @@ def stream_user_conversion(
     checkpoint_dir: str,
     schema: T.StructType,
     ts_col: str = "ts",
-    available_now: bool = True,
 ):
     """The survival-curve inputs maintained AT INGEST: per micro-batch,
     fold each user's (min first event day, min conversion day, max
@@ -1445,9 +1415,7 @@ def stream_user_conversion(
         ),
         _agg_merge(["user_id"], first_day=_min, conv_day=_min, last_day=_max),
     )
-    return _fold_stream(
-        spark, schema, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, schema, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming privacy-gate (QI band-count) maintenance ---------------------
@@ -1504,7 +1472,6 @@ def stream_qi_counts(
     warehouse_root: str,
     checkpoint_dir: str,
     schema: T.StructType,
-    available_now: bool = True,
 ):
     """The privacy release gates maintained AT INGEST: per micro-batch,
     fold the batch's (weekday, hour band, event type, spend band)
@@ -1528,9 +1495,7 @@ def stream_qi_counts(
         qi_band_counts,
         _agg_merge(_QI_KEYS, n=_sum),
     )
-    return _fold_stream(
-        spark, schema, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, schema, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming word-co-occurrence-graph maintenance --------------------------
@@ -1555,7 +1520,6 @@ def stream_word_graph(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """The word co-occurrence graph maintained AT INGEST: per
     micro-batch, tokenize ONLY the batch's documents into distinct
@@ -1583,9 +1547,7 @@ def stream_word_graph(
         lambda batch: word_cooccur_edges(batch, checkpoint=False),
         lambda ex, d: ex.unionByName(d).distinct(),
     )
-    return _fold_stream(
-        spark, DOC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, DOC_SCHEMA, landing_dir, checkpoint_dir, apply)
 
 
 # --- streaming behavioral-bot-screen maintenance -----------------------------
@@ -1628,7 +1590,6 @@ def stream_bot_screen(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """The behavioral bot screen maintained AT INGEST: per micro-batch,
     fold each user's inter-arrival-gap sufficient statistics
@@ -1697,9 +1658,7 @@ def stream_bot_screen(
             _latest_wins_merge("user_id", seq),
         )
 
-    return _fold_stream(
-        spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply, available_now
-    )
+    return _fold_stream(spark, TM_EVENT_SCHEMA, landing_dir, checkpoint_dir, _apply)
 
 
 # --- streaming text-index (BM25 postings) maintenance ------------------------
@@ -1757,7 +1716,6 @@ def stream_text_index_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Maintain the BM25 postings index from a JSON-lines document
@@ -1804,7 +1762,6 @@ def stream_text_index_cdc(
         landing_dir,
         checkpoint_dir,
         apply,
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -1838,7 +1795,6 @@ def stream_phrase_index_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Maintain the POSITIONAL phrase index from a JSON-lines document
@@ -1873,7 +1829,6 @@ def stream_phrase_index_cdc(
         landing_dir,
         checkpoint_dir,
         apply,
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -1920,7 +1875,6 @@ def stream_ivf_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Maintain IVF posting lists from a JSON-lines embedding changelog
@@ -1973,7 +1927,6 @@ def stream_ivf_cdc(
         landing_dir,
         checkpoint_dir,
         apply,
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -2063,7 +2016,6 @@ def stream_value_histogram_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Maintain the retractable value histogram from a JSON-lines event
@@ -2104,7 +2056,6 @@ def stream_value_histogram_cdc(
         landing_dir,
         checkpoint_dir,
         apply,
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -2154,7 +2105,6 @@ def stream_cms_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Maintain the turnstile count-min sketch from a JSON-lines key
@@ -2186,7 +2136,6 @@ def stream_cms_cdc(
         landing_dir,
         checkpoint_dir,
         apply,
-        available_now,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -2244,7 +2193,6 @@ def stream_column_stats_cdc(
     landing_dir: str,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Maintain ANALYZE statistics from a JSON-lines row changelog — the
     streaming face of ``tpch_stats_analyze_cdc``: the (column, value)
@@ -2269,6 +2217,4 @@ def stream_column_stats_cdc(
         ),
         merge_column_values,
     )
-    return _fold_stream(
-        spark, COLSTATS_CDC_SCHEMA, landing_dir, checkpoint_dir, apply, available_now
-    )
+    return _fold_stream(spark, COLSTATS_CDC_SCHEMA, landing_dir, checkpoint_dir, apply)

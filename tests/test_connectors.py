@@ -1,5 +1,6 @@
-"""Sources/sinks: JSON & ORC round-trips, partitioned layout + pruning,
-bucketed co-located joins (no shuffle), gated connectors, salted join."""
+"""Table layouts: partitioned layout + pruning, schema evolution,
+clustered and Z-ordered files, bucketed co-located joins (no shuffle),
+salted join. JSON-lines and ORC round-trips are in ``test_io.py``."""
 
 from __future__ import annotations
 
@@ -10,15 +11,9 @@ from pyspark.sql import functions as F
 
 from etl__project_spark.operators.skew import salted_join
 from etl__project_spark.sources.connectors import (
-    ConnectorUnavailable,
-    read_delta,
-    read_json,
-    read_orc,
     read_parquet_evolved,
     write_bucketed,
     write_clustered,
-    write_json,
-    write_orc,
     write_partitioned,
     write_zordered,
 )
@@ -29,20 +24,6 @@ def sample(spark):
     return spark.createDataFrame(
         [(i, f"u{i % 7}", float(i)) for i in range(100)], "id long, k string, v double"
     )
-
-
-def test_json_round_trip(spark, tmp_path, sample):
-    path = str(tmp_path / "j")
-    write_json(sample, path)
-    back = read_json(spark, path, sample.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, sample.collect()))
-
-
-def test_orc_round_trip(spark, tmp_path, sample):
-    path = str(tmp_path / "o")
-    write_orc(sample, path)
-    back = read_orc(spark, path)
-    assert back.count() == 100 and set(back.columns) == {"id", "k", "v"}
 
 
 def test_partitioned_layout_prunes(spark, tmp_path, sample):
@@ -236,11 +217,6 @@ def test_bucketed_groupby_has_no_shuffle(spark, sample):
         assert agg.count() == 100
     finally:
         spark.sql("DROP TABLE t_agg")
-
-
-def test_delta_gated(spark):
-    with pytest.raises(ConnectorUnavailable, match="delta"):
-        read_delta(spark, "/tmp/nowhere")
 
 
 def test_salted_join_equals_plain(spark, sample):

@@ -47,11 +47,13 @@ def test_csv_rejects_quarantine(spark, tmp_path):
     )
     p = tmp_path / "in.csv"
     p.write_text("a,b\n1,2\nnot_a_number,5\n3,4\n")
+    spark.catalog.clearCache()
     good, rejects = read_csv_with_rejects(spark, str(p), schema=schema)
     assert sorted(map(tuple, good.select("a", "b").collect())) == [(1, 2), (3, 4)]
     rej = [r["_corrupt_record"] for r in rejects.collect()]
     assert rej == ["not_a_number,5"]
     assert good.count() + rejects.count() == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_normalize_timestamps_is_session_tz_independent(spark):
